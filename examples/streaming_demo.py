@@ -8,18 +8,21 @@
 Run:  python examples/streaming_demo.py [seconds]
 
 This is the reference's README demo (Smoothie.js live chart fed by
-`/analytics` SSE). A real SSE endpoint + live page is served too
-(serving/http.py — open the printed URL while the demo runs); the
-printed snapshots are the same payloads for terminal-only runs.
+`/analytics` SSE). The snapshots come from a real SSE endpoint + live
+page (serving/http.py — open the printed URL while the demo runs); the
+demo prints the frames it reads from that same `/analytics` stream.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
+import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kafka_streams_spring_cloud_stream_tp1_spark.serving import AnalyticsServer
 from kafka_streams_spring_cloud_stream_tp1_spark.session import get_spark
 from kafka_streams_spring_cloud_stream_tp1_spark.sources.generators import page_event_stream
 from kafka_streams_spring_cloud_stream_tp1_spark.streaming import CountStore
@@ -33,17 +36,18 @@ def main(seconds: float = 12.0) -> None:
         "name AS event_type", "user AS user_id", "date AS ts", "duration AS value"
     )
     store = CountStore.start(
-        spark, events, table="demo_store", window="5 seconds",
-        watermark="10 seconds", trigger_seconds=1.0,
+        spark, events, window="5 seconds", watermark="10 seconds", trigger_seconds=1.0
     )
-    from kafka_streams_spring_cloud_stream_tp1_spark.serving import AnalyticsServer
-
     srv = AnalyticsServer.for_store(store).start()
     print(f"live chart: {srv.url}/  (SSE: {srv.url}/analytics)")
-    print(f"streaming 5 events/s; polling the count-store at 1 Hz for {seconds:.0f}s …")
+    n = max(1, round(seconds))
+    print(f"streaming 5 events/s; reading {n} snapshots from /analytics at 1 Hz …")
     try:
-        for snapshot in store.serve(seconds=seconds, interval=1.0):
-            print("analytics:", snapshot, flush=True)
+        # ?n=K: the server closes the stream after K snapshots
+        with urllib.request.urlopen(f"{srv.url}/analytics?n={n}") as sse:
+            for line in sse:
+                if line.startswith(b"data: "):
+                    print("analytics:", json.loads(line[len(b"data: ") :]), flush=True)
     finally:
         srv.stop()
         store.stop()

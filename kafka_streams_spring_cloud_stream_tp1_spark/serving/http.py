@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import json
 import threading
-import time
 from collections.abc import Callable
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -54,13 +53,37 @@ _INDEX_HTML = """<!doctype html>
 """
 
 
+class _HTTPServer(ThreadingHTTPServer):
+    """A ThreadingHTTPServer whose `server_close` joins every handler
+    thread. The threads stay daemonic, so an open SSE stream never
+    blocks interpreter exit; the stdlib's own join skips daemon
+    threads."""
+
+    def __init__(self, *args) -> None:
+        super().__init__(*args)
+        self._handlers: list[threading.Thread] = []
+
+    def process_request(self, request, client_address) -> None:
+        t = threading.Thread(
+            target=self.process_request_thread, args=(request, client_address), daemon=True
+        )
+        self._handlers = [h for h in self._handlers if h.is_alive()] + [t]
+        t.start()
+
+    def server_close(self) -> None:
+        super().server_close()
+        for t in self._handlers:
+            t.join()
+
+
 class AnalyticsServer:
     """Tiny threaded HTTP server exposing the reference's endpoints.
 
     ``fetch``   — zero-arg callable returning the current analytics
-                  snapshot as a plain ``{name: count}`` dict (wrap a
-                  `CountStore.range_fetch().collect()`; kept callable-
-                  shaped so any store backend serves unchanged).
+                  snapshot as a plain ``{name: count}`` dict (normally
+                  `for_store`'s wrap of `CountStore.range_fetch`; a
+                  plain callable keeps the server testable without a
+                  stream).
     ``publish`` — optional ``(name, topic) -> dict`` ingest hook
                   returning the produced event for the HTTP echo; the
                   endpoint answers 503 when absent.
@@ -145,14 +168,13 @@ class AnalyticsServer:
                             sent += 1
                             if limit is not None and sent >= limit:
                                 break
-                            time.sleep(outer.interval)
+                            outer._stopping.wait(outer.interval)
                     else:
                         self._json(404, {"error": f"no route {url.path}"})
                 except (BrokenPipeError, ConnectionResetError):
                     return  # client went away mid-stream — normal for SSE
 
-        self._httpd = ThreadingHTTPServer((self._host, self._port), Handler)
-        self._httpd.daemon_threads = True
+        self._httpd = _HTTPServer((self._host, self._port), Handler)
         self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
         self._thread.start()
         return self
@@ -167,7 +189,12 @@ class AnalyticsServer:
         return f"http://{self._host}:{self.port}"
 
     def stop(self) -> None:
+        """Stop serving; on return no handler is running ``fetch`` or
+        can call it again. Each SSE loop re-checks ``_stopping`` every
+        tick, `shutdown` ends the accept loop (whose thread is then
+        joined) and `server_close` joins every handler thread."""
         self._stopping.set()
         if self._httpd is not None:
             self._httpd.shutdown()
+            self._thread.join()
             self._httpd.server_close()

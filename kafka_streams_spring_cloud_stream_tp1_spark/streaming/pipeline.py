@@ -13,10 +13,11 @@ Semantic mappings (SURVEY.md §4.2):
   + trigger(processingTime="1 second") — emits changed aggregates per
   trigger, not one row per event.
 - RocksDB window store "count-store"  ==  the streaming state store
-  (RocksDB provider configured in session.py) PLUS a `memory` sink
-  table as the *queryable* projection; the interactive range-fetch
-  (Q1) is a tiny batch SQL over that table — same writer-thread vs.
-  reader-thread split as the reference's store.
+  (RocksDB provider configured in session.py) PLUS a `DictKVStore`
+  (sinks.py) that the changelog upserts into via foreachBatch as the
+  *queryable* projection; the interactive range-fetch (Q1) is a tiny
+  batch query over its snapshot — same writer-thread vs. reader-thread
+  split as the reference's store.
 - The reference's accidental 24h grace (deprecated TimeWindows.of) is
   replaced by an explicit, configurable watermark — a documented
   divergence; state must be evictable or a 100TB stream never
@@ -26,14 +27,14 @@ Semantic mappings (SURVEY.md §4.2):
 from __future__ import annotations
 
 import re
-import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import core as ops
+from .sinks import DictKVStore
 
 _UNIT_SECONDS = {
     "millisecond": 0.001,
@@ -84,56 +85,39 @@ def streaming_windowed_counts(
 class CountStore:
     """The queryable window store (reference: RocksDB `count-store` +
     InteractiveQueryService, single-instance serving assumption —
-    SURVEY.md §4.2). Two backends:
+    SURVEY.md §4.2).
 
-    - ``backend="kv"`` (default, the production shape): the changelog
-      upserts into a `DictKVStore` via foreachBatch — the in-process
-      stand-in for an external KV (Redis/Cassandra). Store size is
-      BOUNDED: upserts are idempotent by (name, window) key and windows
-      older than the retention horizon (window + watermark by default,
-      the Kafka Streams windowSize+grace retention rule) are evicted on
-      write. A long-running stream holds only the live window set.
-    - ``backend="memory"`` (tests/demo): Spark's `memory` sink. Update
-      mode APPENDS each trigger's changed rows to the sink table
-      forever, so driver memory grows with stream lifetime — fine for
-      bounded tests, wrong for serving; snapshot() compensates for the
-      duplicate rows with a groupBy().max().
+    The changelog upserts into a `DictKVStore` via foreachBatch — the
+    in-process stand-in for an external KV (Redis/Cassandra). Store size
+    is BOUNDED: upserts are idempotent by (name, window_start,
+    window_end) key and windows older than the retention horizon
+    (window + watermark by default, the Kafka Streams windowSize+grace
+    retention rule) are evicted on write. A long-running stream holds
+    only the live window set.
+
+    With a ``checkpoint`` directory the query restarts from its
+    committed offsets and aggregation state; since upserts are
+    idempotent, an epoch replayed after recovery converges to the same
+    store (exactly-once effect from at-least-once delivery).
     """
 
     spark: SparkSession
     query: StreamingQuery
-    table: str | None = None
-    store: "object | None" = None  # DictKVStore when backend="kv"
-
-    _poll: float = field(default=0.1, repr=False)
+    store: DictKVStore
 
     @classmethod
     def start(
         cls,
         spark: SparkSession,
         events: DataFrame,
-        table: str = "count_store",
         window: str = "5 seconds",
         watermark: str = "10 seconds",
         trigger_seconds: float | None = None,
-        backend: str = "kv",
         retention_seconds: "float | None" = _DEFAULT_RETENTION,
+        checkpoint: str | None = None,
         **kwargs,
     ) -> "CountStore":
         counts = streaming_windowed_counts(events, window=window, watermark=watermark, **kwargs)
-        if backend == "memory":
-            writer = (
-                counts.writeStream.outputMode("update")  # T1: KTable changelog
-                .format("memory")
-                .queryName(table)
-            )
-            if trigger_seconds is not None:
-                # the reference's commit.interval.ms=1000 emission cadence
-                writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-            return cls(spark=spark, query=writer.start(), table=table)
-
-        from .sinks import DictKVStore  # local import: sinks imports this module
-
         if retention_seconds is _DEFAULT_RETENTION:
             # Kafka Streams' minimum window-store retention: size + grace
             retention_seconds = interval_seconds(window) + interval_seconds(watermark)
@@ -149,7 +133,10 @@ class CountStore:
             store.upsert(rows, epoch_id)
 
         writer = counts.writeStream.outputMode("update").foreachBatch(upsert_batch)
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
         if trigger_seconds is not None:
+            # the reference's commit.interval.ms=1000 emission cadence
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         return cls(spark=spark, query=writer.start(), store=store)
 
@@ -159,14 +146,9 @@ class CountStore:
 
     def snapshot(self) -> DataFrame:
         """Current store contents: (name, window_start, window_end, cnt)."""
-        if self.store is not None:
-            rows = [(k[0], k[1], k[2], v) for k, v in self.store.snapshot().items()]
-            return self.spark.createDataFrame(
-                rows, "name string, window_start timestamp, window_end timestamp, cnt long"
-            )
-        raw = self.spark.table(self.table)
-        return raw.groupBy("name", "window_start", "window_end").agg(
-            F.max("cnt").alias("cnt")
+        rows = [(k[0], k[1], k[2], v) for k, v in self.store.snapshot().items()]
+        return self.spark.createDataFrame(
+            rows, "name string, window_start timestamp, window_end timestamp, cnt long"
         )
 
     def range_fetch(self, anchor: Column | None = None, span: str = "5 seconds") -> DataFrame:
@@ -178,17 +160,6 @@ class CountStore:
         snap = self.snapshot().select("name", "window_start", "cnt")
         anchor_col = anchor if anchor is not None else F.current_timestamp()
         return ops.latest_window_per_key(snap, anchor_ts=anchor_col, span=span)
-
-    def serve(self, seconds: float, interval: float = 1.0):
-        """The SSE analytics loop (PageEventController.java:42-58):
-        poll the store once per `interval`, yield {page -> count}
-        snapshots. Generator instead of an HTTP server — the serving
-        protocol is out of engine scope (SURVEY.md V1)."""
-        deadline = time.monotonic() + seconds
-        while time.monotonic() < deadline:
-            rows = self.range_fetch().collect()
-            yield {r["name"]: r["cnt"] for r in rows}
-            time.sleep(interval)
 
     def stop(self) -> None:
         self.query.stop()

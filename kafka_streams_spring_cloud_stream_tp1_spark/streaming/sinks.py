@@ -1,12 +1,11 @@
-"""foreachBatch sinks: the scale-out path for the queryable store.
+"""foreachBatch sinks: the queryable store and the lakehouse ingest.
 
-The memory-sink CountStore (pipeline.py) mirrors the reference's
-single-instance local store. At cluster scale the changelog instead
-upserts into an EXTERNAL key-value store via foreachBatch — every
-micro-batch arrives as a normal DataFrame plus an epoch id, so any
-batch writer (JDBC, Cassandra, Redis, Delta) becomes a streaming sink
-with exactly-once semantics when the write is idempotent (upsert by
-key) and the checkpoint tracks the epoch.
+`CountStore` (pipeline.py) upserts the windowed-count changelog into a
+key-value store via foreachBatch — every micro-batch arrives as a
+normal DataFrame plus an epoch id, so any batch writer (JDBC,
+Cassandra, Redis, Delta) becomes a streaming sink with exactly-once
+semantics when the write is idempotent (upsert by key) and the
+checkpoint tracks the epoch.
 
 `DictKVStore` here is the in-process stand-in for that external KV —
 a real deployment swaps `upsert` for the store's batch-write call;
@@ -17,12 +16,9 @@ the production wiring, exercised by tests/test_checkpoint_recovery.py.
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass, field
 from datetime import timedelta
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .pipeline import streaming_windowed_counts
+from pyspark.sql import DataFrame
 
 
 class DictKVStore:
@@ -58,52 +54,6 @@ class DictKVStore:
     def snapshot(self) -> dict[tuple, int]:
         with self._lock:
             return dict(self._data)
-
-
-@dataclass
-class KVCountStore:
-    """The flagship windowed-count changelog upserted into a KV store
-    through foreachBatch, with a checkpoint for restart recovery."""
-
-    spark: SparkSession
-    store: DictKVStore
-    query: object
-
-    @classmethod
-    def start(
-        cls,
-        spark: SparkSession,
-        events: DataFrame,
-        store: DictKVStore,
-        checkpoint: str,
-        window: str = "5 seconds",
-        watermark: str = "10 seconds",
-    ) -> "KVCountStore":
-        counts = streaming_windowed_counts(events, window=window, watermark=watermark)
-
-        def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
-            # driver-side collect is the stand-in for batch.write to the
-            # external store's connector; the changelog batch is only the
-            # CHANGED (key, window) rows, not the full state
-            rows = [
-                ((r["name"], r["window_start"]), r["cnt"])
-                for r in batch.select("name", "window_start", "cnt").collect()
-            ]
-            store.upsert(rows, epoch_id)
-
-        query = (
-            counts.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(upsert_batch)
-            .start()
-        )
-        return cls(spark=spark, store=store, query=query)
-
-    def process_all(self) -> None:
-        self.query.processAllAvailable()
-
-    def stop(self) -> None:
-        self.query.stop()
 
 
 def start_parquet_ingest(

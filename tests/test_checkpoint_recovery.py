@@ -12,10 +12,7 @@ from datetime import datetime, timedelta
 import pytest
 
 from kafka_streams_spring_cloud_stream_tp1_spark.schemas import EVENTS_SCHEMA
-from kafka_streams_spring_cloud_stream_tp1_spark.streaming.sinks import (
-    DictKVStore,
-    KVCountStore,
-)
+from kafka_streams_spring_cloud_stream_tp1_spark.streaming import CountStore
 
 _EPOCH0 = datetime(2024, 1, 1)
 
@@ -43,24 +40,22 @@ def test_restart_from_checkpoint_restores_state(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     events = lambda: spark.readStream.schema(EVENTS_SCHEMA).json(str(src))  # noqa: E731
 
-    store1 = DictKVStore()
-    run1 = KVCountStore.start(spark, events(), store1, ckpt)
+    run1 = CountStore.start(spark, events(), checkpoint=ckpt)
     try:
         _write_batch(str(src), "b1", [_event(0, 1.0), _event(1, 2.0)])
         run1.process_all()
-        snap1 = {k[0:1] + (k[1].second,): v for k, v in store1.snapshot().items()}
+        snap1 = {k[0:1] + (k[1].second,): v for k, v in run1.store.snapshot().items()}
         assert snap1 == {("P1", 0): 2}
     finally:
         run1.stop()
 
-    # restart: NEW store (simulating the external KV surviving, Spark
-    # state coming from the checkpoint), same checkpoint dir
-    store2 = DictKVStore()
-    run2 = KVCountStore.start(spark, events(), store2, ckpt)
+    # restart: a NEW, empty store (Spark state must come from the
+    # checkpoint, not the KV), same checkpoint dir
+    run2 = CountStore.start(spark, events(), checkpoint=ckpt)
     try:
         _write_batch(str(src), "b2", [_event(2, 3.0)])  # same [0,5s) window
         run2.process_all()
-        snap2 = {k[0:1] + (k[1].second,): v for k, v in store2.snapshot().items()}
+        snap2 = {k[0:1] + (k[1].second,): v for k, v in run2.store.snapshot().items()}
         # count continues from restored state: 2 (pre-stop) + 1 = 3
         assert snap2 == {("P1", 0): 3}, snap2
     finally:

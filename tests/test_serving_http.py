@@ -7,7 +7,12 @@ store (reference: controllers/PageEventController.java:34-58)."""
 from __future__ import annotations
 
 import json
+import subprocess
+import sys
+import threading
+import time
 import urllib.request
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -86,3 +91,61 @@ def test_publish_unconfigured_returns_503(spark):
             assert e.code == 503
     finally:
         srv.stop()
+
+
+def test_stop_joins_server_and_in_flight_handlers():
+    """stop() must not return while an /analytics handler can still
+    call ``fetch`` (in a live server that is a Spark job against a
+    query the caller stops next): the accept-loop thread is dead and
+    a fetch in flight at stop() time has finished, with none after."""
+    in_fetch = threading.Event()
+    active, late = [], []
+    stopped = False
+
+    def fetch() -> dict:
+        if stopped:
+            late.append(time.monotonic())
+        active.append(1)
+        in_fetch.set()
+        # a slow snapshot, in flight when stop() is called; longer than
+        # the accept loop's 0.5 s shutdown poll, so stop() must wait
+        time.sleep(1.0)
+        active.pop()
+        return {"P1": 1}
+
+    srv = AnalyticsServer(fetch=fetch, interval=0.05).start()
+
+    def client() -> None:
+        try:
+            with urllib.request.urlopen(f"{srv.url}/analytics", timeout=10) as r:
+                r.read()
+        except OSError:
+            pass  # the server closing the stream is the expected end
+
+    reader = threading.Thread(target=client, daemon=True)
+    reader.start()
+    try:
+        assert in_fetch.wait(10), "SSE handler never called fetch"
+    finally:
+        srv.stop()
+    stopped = True
+    assert not srv._thread.is_alive()
+    assert not active, "stop() returned while a fetch was still running"
+    time.sleep(0.5)  # several ticks: a surviving handler would fetch again
+    assert not late, "fetch was called after stop() returned"
+    reader.join(10)
+    assert not reader.is_alive()
+
+
+def test_streaming_demo_prints_sse_snapshots():
+    """examples/streaming_demo.py end to end, in its own process (it
+    calls spark.stop(), which must not stop the shared test session).
+    Snapshots are usually {} this early — the first trigger takes
+    seconds — so only their presence is asserted."""
+    repo = Path(__file__).resolve().parent.parent
+    proc = subprocess.run(
+        [sys.executable, str(repo / "examples" / "streaming_demo.py"), "3"],
+        cwd=repo, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert any(line.startswith("analytics: ") for line in proc.stdout.splitlines()), proc.stdout

@@ -52,19 +52,18 @@ def stream_dir(tmp_path):
     return str(d)
 
 
-def _start_store(spark, stream_dir, table):
+def _start_store(spark, stream_dir):
     events = spark.readStream.schema(EVENTS_SCHEMA).json(stream_dir)
     # retention disabled: these tests assert on closed windows, which
     # the production default (window + watermark) would evict;
     # test_kv_store_retention_bounds_size covers the eviction path
     return CountStore.start(
-        spark, events, table=table, window="5 seconds", watermark="10 seconds",
-        retention_seconds=None,
+        spark, events, window="5 seconds", watermark="10 seconds", retention_seconds=None
     )
 
 
 def test_windowed_counts_and_range_fetch(spark, stream_dir):
-    store = _start_store(spark, stream_dir, "cs_main")
+    store = _start_store(spark, stream_dir)
     try:
         # batch 1: window [0,5s) gets 2 qualifying P-views, [5,10s) gets 1;
         # a low-duration event is filtered out (F1)
@@ -107,7 +106,7 @@ def test_windowed_counts_and_range_fetch(spark, stream_dir):
 
 
 def test_watermark_drops_too_late_data(spark, stream_dir):
-    store = _start_store(spark, stream_dir, "cs_late")
+    store = _start_store(spark, stream_dir)
     try:
         # advance stream-time to 60s => watermark 50s after this batch
         _write_batch(
@@ -167,22 +166,19 @@ def test_kv_store_retention_bounds_size(spark, stream_dir):
         store.stop()
 
 
-def test_memory_backend_snapshot_dedups_updates(spark, stream_dir):
-    """The memory-sink backend (tests/demo) appends one row per update;
-    snapshot() must fold them back to latest-per-(key, window)."""
-    store = CountStore.start(
-        spark,
-        spark.readStream.schema(EVENTS_SCHEMA).json(stream_dir),
-        table="cs_mem",
-        backend="memory",
-        window="5 seconds",
-        watermark="10 seconds",
-    )
+def test_kv_store_snapshot_dedups_updates(spark, stream_dir):
+    """Two changelog batches updating one window leave exactly one
+    store entry holding the latest count: upserts replace by
+    (name, window) key instead of appending a row per update."""
+    store = _start_store(spark, stream_dir)
     try:
         _write_batch(stream_dir, "b1", [_event(0, 1.0, "P1", 200.0)])
         store.process_all()
         _write_batch(stream_dir, "b2", [_event(1, 2.0, "P1", 300.0)])
-        store.process_all()  # same window updates: sink now holds 2 rows for it
+        store.process_all()  # same window updates: 1 -> 2
+        kv = store.store.snapshot()
+        assert len(kv) == 1, kv
+        assert {(k[0], k[1].second): v for k, v in kv.items()} == {("P1", 0): 2}
         rows = store.snapshot().collect()
         assert len(rows) == 1 and rows[0]["cnt"] == 2
     finally:

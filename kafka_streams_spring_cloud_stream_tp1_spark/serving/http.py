@@ -8,7 +8,10 @@ controllers/PageEventController.java:34-58, static/index.html:17-37):
   JSON map per poll interval (1 Hz like the reference's
   ``Flux.interval(Duration.ofSeconds(1))``), each snapshot produced by
   the injected ``fetch`` callable (normally `CountStore.range_fetch`,
-  the Q1 latest-window-per-key query).
+  the Q1 latest-window-per-key read of the store, run in process with
+  no Spark job per snapshot). A failing ``fetch`` — including a
+  stopped or failed streaming query — ends the stream with one
+  ``event: error`` frame instead of serving stale counts.
 - ``GET /publish?name=X&topic=T`` — the S1 ingest endpoint: delegates
   to the injected ``publish`` callable and echoes the produced event
   as the JSON response body, exactly like the reference's
@@ -19,7 +22,7 @@ controllers/PageEventController.java:34-58, static/index.html:17-37):
   the serving contract (SSE wire format, 1 Hz cadence) is identical.
 
 Engine boundary note (SURVEY.md §2.1 V1): everything here is a THIN
-shell over driver-local queries — stdlib ``http.server`` only, no
+shell over driver-local reads — stdlib ``http.server`` only, no
 framework. The serving thread reads the store while the streaming
 query's executor threads write it: the same store-writer vs
 store-reader split as the reference's InteractiveQueryService. At
@@ -43,10 +46,13 @@ _INDEX_HTML = """<!doctype html>
 <pre id="log"></pre>
 <script>
   const log = document.getElementById("log");
-  new EventSource("/analytics").onmessage = (e) => {
-    log.textContent = new Date().toISOString() + "  " + e.data + "\\n"
+  const show = (line) => {
+    log.textContent = new Date().toISOString() + "  " + line + "\\n"
                       + log.textContent.split("\\n").slice(0, 19).join("\\n");
   };
+  const sse = new EventSource("/analytics");
+  sse.onmessage = (e) => show(e.data);
+  sse.addEventListener("error", (e) => { if (e.data) show("error " + e.data); });
 </script>
 </body>
 </html>
@@ -81,9 +87,11 @@ class AnalyticsServer:
 
     ``fetch``   — zero-arg callable returning the current analytics
                   snapshot as a plain ``{name: count}`` dict (normally
-                  `for_store`'s wrap of `CountStore.range_fetch`; a
-                  plain callable keeps the server testable without a
-                  stream).
+                  `for_store`'s call of `CountStore.range_fetch`, an
+                  in-process store read; a plain callable keeps the
+                  server testable without a stream). If it raises, the
+                  SSE stream sends one ``event: error`` frame and
+                  ends.
     ``publish`` — optional ``(name, topic) -> dict`` ingest hook
                   returning the produced event for the HTTP echo; the
                   endpoint answers 503 when absent.
@@ -108,12 +116,16 @@ class AnalyticsServer:
 
     @classmethod
     def for_store(cls, store, anchor=None, span: str = "5 seconds", **kwargs) -> "AnalyticsServer":
-        """Serve a `CountStore`: each SSE tick runs the Q1 range fetch
-        (latest window per page over [anchor − span, anchor])."""
+        """Serve a `CountStore`: each SSE tick reads Q1 (latest window
+        per page over [anchor − span, anchor]) straight from the store,
+        with no Spark job. Once the query is no longer active the fetch
+        raises, with the query's exception when it failed, so the
+        stream reports it instead of serving the last counts."""
 
         def fetch() -> dict:
-            rows = store.range_fetch(anchor=anchor, span=span).collect()
-            return {r["name"]: r["cnt"] for r in rows}
+            if not store.query.isActive:
+                raise RuntimeError(f"query is not active: {store.query.exception() or 'stopped'}")
+            return store.range_fetch(anchor=anchor, span=span)
 
         return cls(fetch, **kwargs)
 
@@ -162,7 +174,12 @@ class AnalyticsServer:
                         self.end_headers()
                         sent = 0
                         while not outer._stopping.is_set():
-                            snap = outer.fetch()
+                            try:
+                                snap = outer.fetch()
+                            except Exception as e:  # reported, never a quiet stream
+                                err = json.dumps({"error": f"{type(e).__name__}: {e}"})
+                                self.wfile.write(f"event: error\ndata: {err}\n\n".encode())
+                                return
                             self.wfile.write(f"data: {json.dumps(snap)}\n\n".encode())
                             self.wfile.flush()
                             sent += 1

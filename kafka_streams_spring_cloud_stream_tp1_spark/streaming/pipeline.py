@@ -15,9 +15,9 @@ Semantic mappings (SURVEY.md §4.2):
 - RocksDB window store "count-store"  ==  the streaming state store
   (RocksDB provider configured in session.py) PLUS a `DictKVStore`
   (sinks.py) that the changelog upserts into via foreachBatch as the
-  *queryable* projection; the interactive range-fetch (Q1) is a tiny
-  batch query over its snapshot — same writer-thread vs. reader-thread
-  split as the reference's store.
+  *queryable* projection; the interactive range-fetch (Q1) is an
+  in-process read of that store, with no Spark job per snapshot — same
+  writer-thread vs. reader-thread split as the reference's store.
 - The reference's accidental 24h grace (deprecated TimeWindows.of) is
   replaced by an explicit, configurable watermark — a documented
   divergence; state must be evictable or a 100TB stream never
@@ -28,8 +28,9 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from datetime import datetime, timedelta
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -151,15 +152,14 @@ class CountStore:
             rows, "name string, window_start timestamp, window_end timestamp, cnt long"
         )
 
-    def range_fetch(self, anchor: Column | None = None, span: str = "5 seconds") -> DataFrame:
+    def range_fetch(self, anchor: datetime | None = None, span: str = "5 seconds") -> dict[str, int]:
         """Q1 — the reference's 1 Hz interactive query
         (PageEventController.java:47-55): windows starting within
-        [anchor - span, anchor] folded to latest-window-per-page.
-        ``anchor`` defaults to now(), exactly like the reference.
-        """
-        snap = self.snapshot().select("name", "window_start", "cnt")
-        anchor_col = anchor if anchor is not None else F.current_timestamp()
-        return ops.latest_window_per_key(snap, anchor_ts=anchor_col, span=span)
+        [anchor - span, anchor] folded to latest-window-per-page, read
+        from the store in process. ``anchor`` defaults to now()."""
+        # keys are naive local time: TimestampType.fromInternal uses datetime.fromtimestamp
+        anchor = anchor if anchor is not None else datetime.now()
+        return self.store.latest(anchor - timedelta(seconds=interval_seconds(span)), anchor)
 
     def stop(self) -> None:
         self.query.stop()

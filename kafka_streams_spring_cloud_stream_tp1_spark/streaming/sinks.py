@@ -11,20 +11,21 @@ checkpoint tracks the epoch.
 a real deployment swaps `upsert` for the store's batch-write call;
 everything else (update-mode changelog, checkpointing, recovery) is
 the production wiring, exercised by tests/test_checkpoint_recovery.py.
+Q1 reads it in process (`latest`), with no Spark job per snapshot.
 """
 
 from __future__ import annotations
 
 import threading
-from datetime import timedelta
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame
 
 
 class DictKVStore:
-    """Thread-safe (key → value) upsert store, the external-KV stand-in.
-    Keys start with (name, window_start); upserts are idempotent, so
-    epoch replays after recovery converge to the same state
+    """Thread-safe upsert store, the external-KV stand-in, laid out as
+    (window_start, window_end) → {name: count}; upserts are idempotent,
+    so epoch replays after recovery converge to the same state
     (exactly-once effect from at-least-once delivery).
 
     ``retention_seconds`` bounds store size for long-running streams:
@@ -35,25 +36,29 @@ class DictKVStore:
     keeps everything (bounded tests / changelog audits)."""
 
     def __init__(self, retention_seconds: float | None = None) -> None:
-        self._data: dict[tuple, int] = {}
+        self._windows: dict[tuple, dict[str, int]] = {}
         self._lock = threading.Lock()
         self._retention = retention_seconds
-        self.epochs_seen: list[int] = []
 
     def upsert(self, rows: list[tuple], epoch_id: int) -> None:
         with self._lock:
-            self.epochs_seen.append(epoch_id)
-            for key, cnt in rows:
-                self._data[key] = cnt
-            if self._retention is not None and self._data:
-                high = max(k[1] for k in self._data)
-                horizon = high - timedelta(seconds=self._retention)
-                for k in [k for k in self._data if k[1] < horizon]:
-                    del self._data[k]
+            for (name, start, end), cnt in rows:
+                self._windows.setdefault((start, end), {})[name] = cnt
+            if self._retention is not None and self._windows:
+                horizon = max(self._windows)[0] - timedelta(seconds=self._retention)
+                for w in [w for w in self._windows if w[0] < horizon]:
+                    del self._windows[w]
 
     def snapshot(self) -> dict[tuple, int]:
+        """Every key as (name, window_start, window_end) → count."""
         with self._lock:
-            return dict(self._data)
+            return {(n, s, e): c for (s, e), pages in self._windows.items() for n, c in pages.items()}
+
+    def latest(self, lo: datetime, hi: datetime) -> dict[str, int]:
+        """{name: count} over windows starting in [lo, hi], the latest start winning per name."""
+        with self._lock:
+            in_range = sorted(w for w in self._windows if lo <= w[0] <= hi)
+            return {n: c for w in in_range for n, c in self._windows[w].items()}
 
 
 def start_parquet_ingest(

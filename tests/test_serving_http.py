@@ -12,15 +12,14 @@ import sys
 import threading
 import time
 import urllib.request
+from datetime import timedelta
 from pathlib import Path
-
-from pyspark.sql import functions as F
 
 from kafka_streams_spring_cloud_stream_tp1_spark.schemas import EVENTS_SCHEMA
 from kafka_streams_spring_cloud_stream_tp1_spark.serving import AnalyticsServer
 from kafka_streams_spring_cloud_stream_tp1_spark.streaming import CountStore
 
-from .test_streaming import BASE, _event, _write_batch
+from .test_streaming import _EPOCH0, _event, _write_batch
 
 
 def test_publish_analytics_and_index(spark, tmp_path):
@@ -42,7 +41,7 @@ def test_publish_analytics_and_index(spark, tmp_path):
 
     srv = AnalyticsServer.for_store(
         store,
-        anchor=F.to_timestamp(F.lit(f"{BASE}04")),  # fixed anchor: data is at 2024-01-01
+        anchor=_EPOCH0 + timedelta(seconds=4),  # fixed anchor: data is at 2024-01-01
         publish=publish,
         interval=0.05,
     ).start()
@@ -91,6 +90,57 @@ def test_publish_unconfigured_returns_503(spark):
             assert e.code == 503
     finally:
         srv.stop()
+
+
+def _sse_body(url: str) -> list[bytes]:
+    with urllib.request.urlopen(url, timeout=10) as r:
+        return r.read().splitlines()
+
+
+def _error_frame(lines: list[bytes]) -> dict:
+    """The stream's one ``event: error`` frame, which must end it."""
+    i = lines.index(b"event: error")
+    assert lines[i + 1].startswith(b"data: ") and not any(lines[i + 2 :]), lines
+    return json.loads(lines[i + 1][len(b"data: ") :])
+
+
+def test_failing_fetch_ends_stream_with_error_frame():
+    """A fetch that raises is reported as an SSE error frame, not a
+    silently closed socket."""
+
+    def fetch() -> dict:
+        raise ValueError("store unreachable")
+
+    srv = AnalyticsServer(fetch=fetch, interval=0.05).start()
+    try:
+        lines = _sse_body(f"{srv.url}/analytics?n=3")
+    finally:
+        srv.stop()
+    assert lines[0] == b"event: error", lines  # no snapshot before it
+    assert _error_frame(lines) == {"error": "ValueError: store unreachable"}
+
+
+def test_stopped_query_is_reported_not_served(spark, tmp_path):
+    """Once the store's query stops, /analytics reports it instead of
+    serving the store's last counts as if they were live."""
+    stream_dir = tmp_path / "in"
+    stream_dir.mkdir()
+    _write_batch(str(stream_dir), "b1", [_event(0, 1.0, "P1", 500.0)])
+    events = spark.readStream.schema(EVENTS_SCHEMA).json(str(stream_dir))
+    store = CountStore.start(
+        spark, events, window="5 seconds", watermark="10 seconds", retention_seconds=None
+    )
+    srv = AnalyticsServer.for_store(store, anchor=_EPOCH0 + timedelta(seconds=1), interval=0.05).start()
+    try:
+        store.process_all()
+        lines = _sse_body(f"{srv.url}/analytics?n=1")
+        assert lines[0] == b'data: {"P1": 1}', lines
+        store.stop()
+        error = _error_frame(_sse_body(f"{srv.url}/analytics?n=1"))
+    finally:
+        srv.stop()
+        store.stop()
+    assert error["error"].startswith("RuntimeError: query is not active"), error
 
 
 def test_stop_joins_server_and_in_flight_handlers():

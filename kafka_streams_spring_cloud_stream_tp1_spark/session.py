@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the batch floor: AQE coalesces it down per stage. Streaming queries
+# run with AQE off, so CountStore sizes its state to the cores instead.
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 

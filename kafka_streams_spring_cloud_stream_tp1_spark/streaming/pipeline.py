@@ -55,6 +55,8 @@ def interval_seconds(interval: str) -> float:
     return float(m.group(1)) * _UNIT_SECONDS[m.group(2)]
 
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
 # sentinel: "caller didn't choose" → window + watermark; explicit None
 # disables eviction (tests / changelog audits)
 _DEFAULT_RETENTION: float = object()  # type: ignore[assignment]
@@ -96,10 +98,17 @@ class CountStore:
     retention rule) are evicted on write. A long-running stream holds
     only the live window set.
 
+    The query's state has one partition per core
+    (``defaultParallelism``), not the session's batch shuffle floor:
+    per-trigger cost scales with the partition count and nothing
+    coalesces streaming state. The caller's session conf is left as
+    it was.
+
     With a ``checkpoint`` directory the query restarts from its
     committed offsets and aggregation state; since upserts are
     idempotent, an epoch replayed after recovery converges to the same
-    store (exactly-once effect from at-least-once delivery).
+    store (exactly-once effect from at-least-once delivery). Its state
+    partition count is the one frozen in that checkpoint at first start.
     """
 
     spark: SparkSession
@@ -139,7 +148,19 @@ class CountStore:
         if trigger_seconds is not None:
             # the reference's commit.interval.ms=1000 emission cadence
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return cls(spark=spark, query=writer.start(), store=store)
+        # start() copies the session conf into the query, so the
+        # per-core override only needs to hold around it
+        conf = events.sparkSession.conf
+        caller_partitions = conf.get(_SHUFFLE_PARTITIONS, None)
+        conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+        try:
+            query = writer.start()
+        finally:
+            if caller_partitions is None:
+                conf.unset(_SHUFFLE_PARTITIONS)
+            else:
+                conf.set(_SHUFFLE_PARTITIONS, caller_partitions)
+        return cls(spark=spark, query=query, store=store)
 
     def process_all(self) -> None:
         """Drain everything currently available (test/demo helper)."""

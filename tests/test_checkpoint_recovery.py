@@ -62,6 +62,46 @@ def test_restart_from_checkpoint_restores_state(spark, tmp_path):
         run2.stop()
 
 
+def test_restart_keeps_checkpoint_partition_count(spark, tmp_path):
+    """A checkpoint written with the session's partition count (8 in
+    conftest, as deployments that predate per-core state wrote 32)
+    restarts under CountStore with its state intact, on the count
+    frozen in the checkpoint rather than one partition per core."""
+    from kafka_streams_spring_cloud_stream_tp1_spark.streaming import (
+        streaming_windowed_counts,
+    )
+
+    session_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    src = tmp_path / "in"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    events = lambda: spark.readStream.schema(EVENTS_SCHEMA).json(str(src))  # noqa: E731
+
+    run1 = (
+        streaming_windowed_counts(events())
+        .writeStream.outputMode("update")
+        .foreachBatch(lambda batch, _epoch: batch.collect())
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        _write_batch(str(src), "b1", [_event(0, 1.0), _event(1, 2.0)])
+        run1.processAllAvailable()
+    finally:
+        run1.stop()
+
+    run2 = CountStore.start(spark, events(), checkpoint=ckpt)
+    try:
+        _write_batch(str(src), "b2", [_event(2, 3.0)])  # same [0,5s) window
+        run2.process_all()
+        snap2 = {k[0:1] + (k[1].second,): v for k, v in run2.store.snapshot().items()}
+        assert snap2 == {("P1", 0): 3}, snap2
+        progress = json.loads(run2.query.lastProgress.json)
+        assert progress["stateOperators"][0]["numShufflePartitions"] == session_partitions
+    finally:
+        run2.stop()
+
+
 def test_streaming_parquet_ingest_exactly_once(spark, tmp_path):
     """Streaming append to partitioned parquet: all rows land exactly
     once, directory-partitioned; a restart from the checkpoint does

@@ -180,6 +180,23 @@ def test_kv_store_snapshot_dedups_updates(spark, stream_dir):
         store.stop()
 
 
+def test_count_store_state_has_one_partition_per_core(spark, stream_dir):
+    """The query's state is sized to the cores, not to the session's
+    batch shuffle floor, and the caller's session conf is untouched."""
+    # 8 from conftest, unless an earlier test re-applied the package default
+    session_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    store = _start_store(spark, stream_dir)
+    try:
+        _write_batch(stream_dir, "b1", [_event(0, 1.0, "P1", 200.0)])
+        store.process_all()
+        progress = json.loads(store.query.lastProgress.json)
+        state_partitions = progress["stateOperators"][0]["numShufflePartitions"]
+        assert state_partitions == spark.sparkContext.defaultParallelism
+        assert spark.conf.get("spark.sql.shuffle.partitions") == session_partitions
+    finally:
+        store.stop()
+
+
 def test_rate_source_generator_shape(spark):
     stream = page_event_stream(spark, rows_per_second=5, seed=7)
     assert stream.isStreaming

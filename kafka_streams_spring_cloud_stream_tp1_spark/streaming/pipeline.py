@@ -56,6 +56,11 @@ def interval_seconds(interval: str) -> float:
 
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_CHANGELOG_CHECKPOINTING = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+_CHECKPOINT_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FILE_SYSTEM_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 # sentinel: "caller didn't choose" → window + watermark; explicit None
 # disables eviction (tests / changelog audits)
@@ -84,6 +89,40 @@ def streaming_windowed_counts(
     return ops.unwrap_windowed_key(counts, keep_bounds=True)
 
 
+def count_store_query_conf(spark: SparkSession, checkpoint: str | None) -> dict[str, str]:
+    """The settings CountStore's query starts with, on top of the
+    session's own.
+
+    - One state partition per core: AQE is off in streaming queries, so
+      nothing coalesces the session's batch shuffle floor.
+    - RocksDB changelog checkpointing: a commit writes one
+      ``N.changelog`` per partition instead of zipping a snapshot.
+    - On a local checkpoint, the FileSystem checkpoint manager: without
+      native Hadoop IO, the default FileContext manager forks a
+      ``readlink`` per existence check. Both managers check, then
+      rename on the local file system. Every other scheme keeps
+      Spark's default: on HDFS, FileContext's overwrite-rename is
+      atomic where the FileSystem manager's is not.
+
+    ``checkpoint=None`` resolves like Spark does: under the session's
+    ``spark.sql.streaming.checkpointLocation`` if set, else a temporary
+    directory; a path without a scheme is on ``fs.defaultFS``.
+    """
+    conf = {
+        _SHUFFLE_PARTITIONS: str(spark.sparkContext.defaultParallelism),
+        _CHANGELOG_CHECKPOINTING: "true",
+    }
+    location = checkpoint or spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+    hadoop_fs = spark._jvm.org.apache.hadoop.fs
+    scheme = location and hadoop_fs.Path(location).toUri().getScheme()
+    if not scheme:
+        hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+        scheme = hadoop_fs.FileSystem.getDefaultUri(hadoop_conf).getScheme()
+    if scheme == "file":
+        conf[_CHECKPOINT_FILE_MANAGER] = _FILE_SYSTEM_MANAGER
+    return conf
+
+
 @dataclass
 class CountStore:
     """The queryable window store (reference: RocksDB `count-store` +
@@ -98,11 +137,12 @@ class CountStore:
     retention rule) are evicted on write. A long-running stream holds
     only the live window set.
 
-    The query's state has one partition per core
-    (``defaultParallelism``), not the session's batch shuffle floor:
-    per-trigger cost scales with the partition count and nothing
-    coalesces streaming state. The caller's session conf is left as
-    it was.
+    The query starts with ``count_store_query_conf``: one state
+    partition per core (``defaultParallelism``), not the session's
+    batch shuffle floor; RocksDB changelog commits; and, on a local
+    checkpoint, the FileSystem checkpoint manager. Per-trigger
+    overhead, not per-row cost, sets the store's freshness. The
+    caller's session conf is left as it was.
 
     With a ``checkpoint`` directory the query restarts from its
     committed offsets and aggregation state; since upserts are
@@ -149,17 +189,20 @@ class CountStore:
             # the reference's commit.interval.ms=1000 emission cadence
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         # start() copies the session conf into the query, so the
-        # per-core override only needs to hold around it
-        conf = events.sparkSession.conf
-        caller_partitions = conf.get(_SHUFFLE_PARTITIONS, None)
-        conf.set(_SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+        # query's settings only need to hold around it
+        session = events.sparkSession
+        settings = count_store_query_conf(session, checkpoint)
+        caller = {key: session.conf.get(key, None) for key in settings}
+        for key, value in settings.items():
+            session.conf.set(key, value)
         try:
             query = writer.start()
         finally:
-            if caller_partitions is None:
-                conf.unset(_SHUFFLE_PARTITIONS)
-            else:
-                conf.set(_SHUFFLE_PARTITIONS, caller_partitions)
+            for key, value in caller.items():
+                if value is None:
+                    session.conf.unset(key)
+                else:
+                    session.conf.set(key, value)
         return cls(spark=spark, query=query, store=store)
 
     def process_all(self) -> None:

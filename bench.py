@@ -139,7 +139,7 @@ def main() -> None:
     # whose fresh-JVM floors measure 0.6-1.5 s — first-pass GC/JIT
     # noise the >3 s gate never re-examined. Same min-keeping
     # methodology, one band wider; old numbers kept in
-    # plans/r12/BENCH_DETAIL_before.json (see OPTIMIZATION_r12.md).
+    # git show c2bfb5e:plans/r12/BENCH_DETAIL_before.json (see OPTIMIZATION_r12.md).
     RERUN_OVER_SEC = 2.0
     for _pass in range(2):
         for name, t in list(timings.items()):

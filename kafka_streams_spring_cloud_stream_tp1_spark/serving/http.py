@@ -167,7 +167,11 @@ class AnalyticsServer:
                     elif url.path == "/analytics":
                         # ?n=K closes after K events (test hook); the
                         # reference streams until the client disconnects
-                        limit = int(q.get("n", ["0"])[0]) or None
+                        n = q.get("n", ["0"])[0]
+                        if not (n.isascii() and n.isdigit()):
+                            self._json(400, {"error": f"n must be a non-negative integer, got {n!r}"})
+                            return
+                        limit = int(n) or None
                         self.send_response(200)
                         self.send_header("Content-Type", "text/event-stream")
                         self.send_header("Cache-Control", "no-cache")

@@ -129,6 +129,11 @@ class CountStore:
     InteractiveQueryService, single-instance serving assumption —
     SURVEY.md §4.2).
 
+    It counts the reference's fixed topology over ``EVENTS_SCHEMA``
+    rows: ``value > 100``, keyed by ``event_type``, in ``window``-sized
+    tumbling windows of ``ts`` (``streaming_windowed_counts``'
+    defaults); only ``window`` and ``watermark`` are parameters.
+
     The changelog upserts into a `DictKVStore` via foreachBatch — the
     in-process stand-in for an external KV (Redis/Cassandra). Store size
     is BOUNDED: upserts are idempotent by (name, window_start,
@@ -165,9 +170,8 @@ class CountStore:
         trigger_seconds: float | None = None,
         retention_seconds: "float | None" = _DEFAULT_RETENTION,
         checkpoint: str | None = None,
-        **kwargs,
     ) -> "CountStore":
-        counts = streaming_windowed_counts(events, window=window, watermark=watermark, **kwargs)
+        counts = streaming_windowed_counts(events, window=window, watermark=watermark)
         if retention_seconds is _DEFAULT_RETENTION:
             # Kafka Streams' minimum window-store retention: size + grace
             retention_seconds = interval_seconds(window) + interval_seconds(watermark)

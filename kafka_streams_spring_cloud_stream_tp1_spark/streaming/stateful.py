@@ -84,64 +84,6 @@ def stream_dedup(
     return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark([id_col])
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas needs protobuf on the Python workers
-    (its state-server protocol is proto-encoded). This container ships
-    without it (and without pip), so the v2 stateful path is gated the
-    same way the live Kafka loop is — present, tested where the
-    dependency exists, skipped cleanly where not."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def running_page_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-page running (count, value-total) on the v2 arbitrary-state
-    API (`transformWithStateInPandas`, Spark 4): typed ValueState per
-    key, Arrow-batched input, update-mode emission — the successor of
-    `running_page_stats`'s applyInPandasWithState with composable
-    state variables and (unused here) timers. Requires protobuf on the
-    workers — see tws_available()."""
-    from typing import Iterator
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n LONG, total DOUBLE")
-
-        def handleInputRows(self, key, rows, timer_values) -> Iterator["pd.DataFrame"]:
-            import pandas as pd
-
-            if self._agg.exists():
-                prev = self._agg.get()
-                n, total = int(prev[0]), float(prev[1])
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._agg.update((n, total))
-            yield pd.DataFrame({"name": [key[0]], "n": [n], "total": [total]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select(F.col("event_type").alias("name"), F.col("value"))
-        .groupBy("name")
-        .transformWithStateInPandas(
-            RunningTotals(),
-            outputStructType="name string, n long, total double",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 EWMA_SCHEMA = "user_id long, n_events long, ewma double"
 _EWMA_STATE_SCHEMA = "n_events long, ewma double"
 
@@ -185,51 +127,5 @@ def running_ewma(
             stateStructType=_EWMA_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def running_ewma_tws(events: DataFrame, alpha: float = 0.5) -> DataFrame:
-    """`running_ewma` on the v2 arbitrary-state API
-    (`transformWithStateInPandas`): one typed ValueState carrying the
-    (n, ewma) fold per key — the same O(1)-forever state contract,
-    with composable state variables and timers available for an
-    idle-key TTL at web scale. Protobuf-gated like
-    `running_page_totals_tws` (see tws_available())."""
-    from typing import Iterator as _It
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class RunningEwma(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("ewma", "n LONG, e DOUBLE")
-
-        def handleInputRows(self, key, rows, timer_values) -> _It["pd.DataFrame"]:
-            import pandas as pd
-
-            if self._st.exists():
-                prev = self._st.get()
-                n, e = int(prev[0]), float(prev[1])
-            else:
-                n, e = 0, None
-            for pdf in rows:
-                for v in pdf.sort_values(["ts", "event_id"])["value"]:
-                    v = float(v)
-                    e = v if e is None else e * (1.0 - alpha) + v * alpha
-                    n += 1
-            self._st.update((n, e))
-            yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "ewma": [e]})
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningEwma(),
-            outputStructType=EWMA_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
         )
     )

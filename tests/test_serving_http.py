@@ -120,6 +120,25 @@ def test_failing_fetch_ends_stream_with_error_frame():
     assert _error_frame(lines) == {"error": "ValueError: store unreachable"}
 
 
+def test_analytics_rejects_bad_n_with_400():
+    """A malformed ``?n=`` gets a 400 with a JSON error body, not a
+    dropped connection; the server keeps serving afterwards."""
+    srv = AnalyticsServer(fetch=lambda: {"P1": 1}, interval=0.05).start()
+    try:
+        for bad in ("abc", "-1", "1.5"):
+            try:
+                urllib.request.urlopen(f"{srv.url}/analytics?n={bad}", timeout=10)
+                assert False, f"expected 400 for n={bad}"
+            except urllib.error.HTTPError as e:
+                assert e.code == 400
+                assert json.loads(e.read())["error"] == (
+                    f"n must be a non-negative integer, got {bad!r}"
+                )
+        assert _sse_body(f"{srv.url}/analytics?n=1") == [b'data: {"P1": 1}', b""]
+    finally:
+        srv.stop()
+
+
 def test_stopped_query_is_reported_not_served(spark, tmp_path):
     """Once the store's query stops, /analytics reports it instead of
     serving the store's last counts as if they were live."""

@@ -6,6 +6,8 @@ watermark/late-data handling — the behaviors a batch oracle can't see.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 from datetime import datetime, timedelta
 
@@ -17,9 +19,11 @@ from kafka_streams_spring_cloud_stream_tp1_spark.schemas import EVENTS_SCHEMA
 from kafka_streams_spring_cloud_stream_tp1_spark.sources.generators import (
     page_event_batch,
     page_event_stream,
+    publish_event,
 )
 from kafka_streams_spring_cloud_stream_tp1_spark.streaming import CountStore
 from kafka_streams_spring_cloud_stream_tp1_spark.streaming.kafka import (
+    console_sink,
     format_count_changelog,
     parse_page_events,
 )
@@ -243,6 +247,39 @@ def test_kafka_wire_roundtrip_expressions(spark):
         spark.createDataFrame([("P1", 3)], "name string, cnt long")
     ).collect()[0]
     assert (out["key"], out["value"]) == ("P1", "3")
+
+
+def test_publish_event_builds_one_page_event(spark):
+    """S1 without a topic: one echoed PageEvent, random user, duration
+    uniform in [10, 1009] (reference PageEventController.java:34-39)."""
+    rows = publish_event(spark, "P7").collect()
+    assert len(rows) == 1
+    row = rows[0]
+    assert row["name"] == "P7" and row["user"] in {"U1", "U2"}
+    assert 10 <= row["duration"] <= 1009
+
+
+def test_console_sink_prints_each_record_between_banners(spark, stream_dir):
+    """K1: the console consumer prints every record as a dict between
+    ``************`` banners (reference PageEventHandler.java:26-33)."""
+    _write_batch(stream_dir, "b1", [_event(1, 1.0, "P1", 200.0)])
+    events = spark.readStream.schema(EVENTS_SCHEMA).json(stream_dir)
+    out = io.StringIO()
+    with contextlib.redirect_stdout(out):
+        q = console_sink(events)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    row = {
+        "event_id": 1,
+        "ts": _EPOCH0 + timedelta(seconds=1),
+        "user_id": 1,
+        "event_type": "P1",
+        "value": 200.0,
+        "props": None,
+    }
+    assert out.getvalue() == f"{'*' * 12}\n{row}\n{'*' * 12}\n"
 
 
 def _uf_closure(pairs):

@@ -223,34 +223,6 @@ def test_stream_stream_left_outer_emits_nulls_after_watermark(spark, tmp_path):
         q.stop()
 
 
-def test_transform_with_state_running_totals(spark, stream_dir):
-    """v2 arbitrary state (transformWithStateInPandas): ValueState
-    accumulates across triggers per key. Gated on protobuf — absent in
-    this container (documented env blocker, like the Kafka broker)."""
-    from kafka_streams_spring_cloud_stream_tp1_spark.streaming.stateful import (
-        running_page_totals_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("protobuf not available: transformWithState needs it on workers")
-    out = running_page_totals_tws(_file_stream(spark, stream_dir))
-    q = (
-        out.writeStream.format("memory").queryName("tws_totals")
-        .outputMode("update").start()
-    )
-    try:
-        _write_batch(stream_dir, "b1", [_event(0, 1.0, "P1", 100.0), _event(1, 2.0, "P1", 50.0)])
-        q.processAllAvailable()
-        _write_batch(stream_dir, "b2", [_event(2, 3.0, "P1", 25.0)])
-        q.processAllAvailable()
-        rows = [tuple(r) for r in spark.sql(
-            "SELECT * FROM tws_totals ORDER BY n DESC LIMIT 1").collect()]
-        assert rows == [("P1", 3, 175.0)]
-    finally:
-        q.stop()
-
-
 def test_running_ewma_matches_batch_fold(spark, stream_dir):
     """Streaming EWMA: state carries (n, ewma) across triggers, and
     fed the same rows in order the result equals the batch
@@ -276,25 +248,3 @@ def test_running_ewma_matches_batch_fold(spark, stream_dir):
     finally:
         q.stop()
 
-
-def test_running_ewma_tws(spark, stream_dir):
-    """v2-API streaming EWMA — same (n, ewma) carry on typed
-    ValueState; protobuf-gated like the totals test."""
-    from kafka_streams_spring_cloud_stream_tp1_spark.streaming.stateful import (
-        running_ewma_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("protobuf not available: transformWithState needs it on workers")
-    out = running_ewma_tws(_file_stream(spark, stream_dir))
-    q = out.writeStream.outputMode("update").format("memory").queryName("tws_ewma").start()
-    try:
-        _write_batch(stream_dir, "b1", [_event(0, 1.0, "P1", 10.0), _event(1, 2.0, "P1", 20.0)])
-        q.processAllAvailable()
-        _write_batch(stream_dir, "b2", [_event(2, 3.0, "P1", 40.0)])
-        q.processAllAvailable()
-        latest = max(spark.table("tws_ewma").collect(), key=lambda r: r["n_events"])
-        assert (latest["n_events"], latest["ewma"]) == (3, 27.5)
-    finally:
-        q.stop()

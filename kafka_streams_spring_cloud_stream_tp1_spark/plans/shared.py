@@ -39,13 +39,16 @@ sf0.1, and the one-time write cost is repaid by the first reuse.
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple[int, str, str, str], DataFrame] = {}
+from ..session import session_memo
+
+_CACHE: dict[tuple, DataFrame] = {}
 _TMPDIR: str | None = None
 
 
@@ -68,14 +71,11 @@ def shared_df(
     reads the env per call, so flipping the lane mid-session must not
     hand an md5-built materialized intermediate to an xxhash64-built
     consumer (ADVICE r09)."""
-    import os
-
     lane = os.environ.get("SPARK_GRAFT_HASH", "md5")
-    k = (id(spark), sf_dir, key, lane)
-    df = _CACHE.get(k)
-    if df is None:
+
+    def materialize() -> DataFrame:
         path = f"{_tmpdir()}/{id(spark)}_{abs(hash(sf_dir))}_{key}_{lane}"
         build().write.mode("overwrite").parquet(path)
-        df = spark.read.parquet(path)
-        _CACHE[k] = df
-    return df
+        return spark.read.parquet(path)
+
+    return session_memo(_CACHE, spark, (sf_dir, key, lane), materialize)

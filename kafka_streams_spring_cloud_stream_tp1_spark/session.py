@@ -13,8 +13,9 @@ the same plans scale to a multi-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # the batch floor: AQE coalesces it down per stage. Streaming queries
 # run with AQE off, so CountStore sizes its state to the cores instead.
@@ -74,3 +75,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def session_memo(
+    cache: dict[tuple, DataFrame],
+    spark: SparkSession,
+    key: tuple[Hashable, ...],
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """Return ``cache``'s frame for ``(id(spark), *key)``, calling
+    ``build`` on a miss.
+
+    A hit is served only when the cached frame's ``sparkSession is
+    spark``, so ``spark.newSession()`` or a rebuilt session never gets
+    another session's frame. Entries of stopped sessions are dropped
+    first: their frames point at a dead JVM context, and dropping them
+    lets the old session be collected."""
+    for k, df in list(cache.items()):
+        if df.sparkSession.sparkContext._jsc is None:
+            cache.pop(k, None)
+    k = (id(spark), *key)
+    df = cache.get(k)
+    if df is None or df.sparkSession is not spark:
+        df = cache[k] = build()
+    return df

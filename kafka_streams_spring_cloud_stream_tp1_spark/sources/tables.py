@@ -4,12 +4,26 @@ Parquet scans are the engine's batch source: columnar, predicate
 pushdown + column pruning reach the scan via Catalyst (check
 ``.explain``'s PushedFilters / ReadSchema), partition-parallel by
 row-group at scale.
+
+Each table resolves once per session. ``spark.read.parquet`` starts a
+Spark job to infer the file's schema (35-49 ms a call on 4 cores), so
+``load_table`` memoizes the DataFrame it builds and every later query
+build reuses it. The memo key is the calling session, the path and the
+file's identity from ``os.stat`` (``st_ino``, ``st_mtime_ns``,
+``st_size``): a file rewritten at the same path is read again, and a
+session never gets another session's frame (``session.session_memo``,
+the rule ``plans/shared.py`` follows too). A path ``os.stat`` cannot
+see (``hdfs://``, ``s3a://``) is read on every call, as before.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import session_memo
 
 TABLES = (
     "region",
@@ -23,6 +37,8 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _nanos_ts_cols(path: str) -> list[str]:
@@ -61,11 +77,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # DuckDB oracle's naive-UTC reading of the same file.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    for c in _nanos_ts_cols(path):
-        # nanos -> micros truncation matches DuckDB's read of the same file
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+
+    def read() -> DataFrame:
+        df = spark.read.parquet(path)
+        for c in _nanos_ts_cols(path):
+            # nanos -> micros truncation matches DuckDB's read of the same file
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+        return df
+
+    try:
+        st = os.stat(path)
+    except OSError:
+        return read()
+    return session_memo(_CACHE, spark, (path, st.st_ino, st.st_mtime_ns, st.st_size), read)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1317,7 +1317,7 @@ def test_trained_ce_scorer_distributed_matches_local(spark):
     )
 
     x = ce_features(" ".join(qt), [texts[rows[0]["doc_id"]]])
-    z = float(x @ np.asarray(CE_WEIGHTS) + CE_BIAS)
+    z = (x @ np.asarray(CE_WEIGHTS) + CE_BIAS).item()
     assert rows[0]["rerank_score"] == 1.0 / (1.0 + np.exp(-z))
 
 

@@ -22,6 +22,95 @@ def _truth(spark):
     )
 
 
+def _jobs_in_group(spark, group: str, fn):
+    """Run ``fn`` under job group ``group``; return its result and the
+    number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _region_copy(tmp_path):
+    import shutil
+
+    shutil.copy(f"{SF_SMOKE}/region.parquet", tmp_path / "region.parquet")
+    return str(tmp_path)
+
+
+def test_load_table_resolves_once_per_session(spark, tmp_path):
+    """A second ``load_table`` of the same file in the same session is
+    the same frame, and starts no Spark job (no schema inference)."""
+    sf_dir = _region_copy(tmp_path)
+    first, jobs = _jobs_in_group(spark, "memo_first", lambda: load_table(spark, sf_dir, "region"))
+    assert jobs >= 1  # the miss infers the schema: the job counter is live
+    again, jobs = _jobs_in_group(spark, "memo_again", lambda: load_table(spark, sf_dir, "region"))
+    assert jobs == 0
+    assert again is first
+    # the defensive confs still hold on a hit
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    load_table(spark, sf_dir, "region")
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
+def test_load_table_rereads_a_file_rewritten_in_place(spark, tmp_path):
+    """Rewriting the parquet file at the same path changes its identity
+    (mtime, size), so the next call reads the new rows."""
+    import pyarrow.parquet as pq
+
+    sf_dir = _region_copy(tmp_path)
+    path = f"{sf_dir}/region.parquet"
+    before = load_table(spark, sf_dir, "region")
+    n = before.count()
+    pq.write_table(pq.read_table(path).slice(0, 2), path)
+    after = load_table(spark, sf_dir, "region")
+    assert after is not before
+    assert n > 2 and after.count() == 2
+
+
+def test_load_table_never_serves_another_sessions_frame(spark, tmp_path):
+    sf_dir = _region_copy(tmp_path)
+    mine = load_table(spark, sf_dir, "region")
+    other = spark.newSession()
+    theirs = load_table(other, sf_dir, "region")
+    assert theirs is not mine and theirs.sparkSession is other
+    assert load_table(other, sf_dir, "region") is theirs
+    assert load_table(spark, sf_dir, "region") is mine
+    assert sorted(map(tuple, theirs.collect())) == sorted(map(tuple, mine.collect()))
+
+
+def test_session_memo_drops_stopped_sessions_entries():
+    """Pure Python: an entry whose session's context is stopped
+    (``_jsc is None``) is dropped, never served; a frame of another
+    session under a reused key is rebuilt."""
+    from types import SimpleNamespace
+
+    from kafka_streams_spring_cloud_stream_tp1_spark.session import session_memo
+
+    def session():
+        return SimpleNamespace(sparkContext=SimpleNamespace(_jsc=object()))
+
+    def frame(s):
+        return SimpleNamespace(sparkSession=s)
+
+    live, dead = session(), session()
+    cache = {}
+    a = session_memo(cache, live, ("t",), lambda: frame(live))
+    assert session_memo(cache, live, ("t",), lambda: frame(live)) is a
+    d = session_memo(cache, dead, ("t",), lambda: frame(dead))
+    dead.sparkContext._jsc = None
+    session_memo(cache, live, ("u",), lambda: frame(live))
+    assert d not in cache.values() and a in cache.values()
+    # a key whose frame belongs to another session object is rebuilt
+    cache[(id(live), "v")] = frame(session())
+    v = session_memo(cache, live, ("v",), lambda: frame(live))
+    assert v.sparkSession is live
+
+
 def test_jsonl_roundtrip(spark, tmp_path):
     truth = _truth(spark)
     path = str(tmp_path / "events_json")

@@ -2,7 +2,7 @@
 
     rate source (5 PageEvents/s, the reference supplier cadence)
       → filter(duration > 100) → re-key(page) → 5 s tumbling count
-      → queryable count-store (update mode, 1 s trigger)
+      → queryable count-store (update mode, micro-batches back to back)
       → 1 Hz analytics snapshots (the reference's SSE endpoint body)
 
 Run:  python examples/streaming_demo.py [seconds]
@@ -35,9 +35,7 @@ def main(seconds: float = 12.0) -> None:
     events = page_event_stream(spark, rows_per_second=5).selectExpr(
         "name AS event_type", "user AS user_id", "date AS ts", "duration AS value"
     )
-    store = CountStore.start(
-        spark, events, window="5 seconds", watermark="10 seconds", trigger_seconds=1.0
-    )
+    store = CountStore.start(spark, events)
     srv = AnalyticsServer.for_store(store).start()
     print(f"live chart: {srv.url}/  (SSE: {srv.url}/analytics)")
     n = max(1, round(seconds))

@@ -94,7 +94,8 @@ class AnalyticsServer:
                   ends.
     ``publish`` — optional ``(name, topic) -> dict`` ingest hook
                   returning the produced event for the HTTP echo; the
-                  endpoint answers 503 when absent.
+                  endpoint answers 503 when absent and 500, with the
+                  hook's error, when it raises.
     ``interval``— SSE poll cadence (reference: 1 s).
     """
 
@@ -115,19 +116,19 @@ class AnalyticsServer:
         self._stopping = threading.Event()
 
     @classmethod
-    def for_store(cls, store, anchor=None, span: str = "5 seconds", **kwargs) -> "AnalyticsServer":
+    def for_store(cls, store, anchor=None, **server_kwargs) -> "AnalyticsServer":
         """Serve a `CountStore`: each SSE tick reads Q1 (latest window
-        per page over [anchor − span, anchor]) straight from the store,
-        with no Spark job. Once the query is no longer active the fetch
-        raises, with the query's exception when it failed, so the
-        stream reports it instead of serving the last counts."""
+        per page over [anchor − window, anchor]) straight from the
+        store, with no Spark job. Once the query is no longer active
+        the fetch raises, with the query's exception when it failed, so
+        the stream reports it instead of serving the last counts."""
 
         def fetch() -> dict:
             if not store.query.isActive:
                 raise RuntimeError(f"query is not active: {store.query.exception() or 'stopped'}")
-            return store.range_fetch(anchor=anchor, span=span)
+            return store.range_fetch(anchor=anchor)
 
-        return cls(fetch, **kwargs)
+        return cls(fetch, **server_kwargs)
 
     # -- lifecycle ---------------------------------------------------
 
@@ -163,7 +164,12 @@ class AnalyticsServer:
                             return
                         name = q.get("name", ["page"])[0]
                         topic = q.get("topic", [None])[0]
-                        self._json(200, outer.publish(name, topic))
+                        try:
+                            event = outer.publish(name, topic)
+                        except Exception as e:  # reported, never a dropped connection
+                            self._json(500, {"error": f"{type(e).__name__}: {e}"})
+                            return
+                        self._json(200, event)
                     elif url.path == "/analytics":
                         # ?n=K closes after K events (test hook); the
                         # reference streams until the client disconnects

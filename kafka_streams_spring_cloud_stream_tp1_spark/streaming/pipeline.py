@@ -6,12 +6,13 @@ controllers/PageEventController.java:42-58):
 
     source -> filter(duration>100) -> re-key(name) -> [shuffle]
     -> 5s tumbling window count  => "count-store" (queryable)
-    -> changelog stream (update mode, ~1/s)       => sink
+    -> changelog stream (update mode, per micro-batch) => sink
 
 Semantic mappings (SURVEY.md §4.2):
 - KTable changelog + commit.interval.ms=1000  ==  outputMode("update")
-  + trigger(processingTime="1 second") — emits changed aggregates per
-  trigger, not one row per event.
+  with micro-batches run back to back (no trigger interval) — emits
+  changed aggregates per trigger, not one row per event, well inside
+  the reference's 1 s commit cadence.
 - RocksDB window store "count-store"  ==  the streaming state store
   (RocksDB provider configured in session.py) PLUS a `DictKVStore`
   (sinks.py) that the changelog upserts into via foreachBatch as the
@@ -19,14 +20,16 @@ Semantic mappings (SURVEY.md §4.2):
   in-process read of that store, with no Spark job per snapshot — same
   writer-thread vs. reader-thread split as the reference's store.
 - The reference's accidental 24h grace (deprecated TimeWindows.of) is
-  replaced by an explicit, configurable watermark — a documented
-  divergence; state must be evictable or a 100TB stream never
-  compacts.
+  replaced by an explicit watermark — a documented divergence; state
+  must be evictable or a 100TB stream never compacts.
+
+The topology is fixed here, as the reference fixes it in its handler:
+one 5 s window and one 10 s watermark, from which the store retention
+and Q1's span follow.
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
@@ -37,23 +40,10 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators import core as ops
 from .sinks import DictKVStore
 
-_UNIT_SECONDS = {
-    "millisecond": 0.001,
-    "second": 1.0,
-    "minute": 60.0,
-    "hour": 3600.0,
-    "day": 86400.0,
-}
-
-
-def interval_seconds(interval: str) -> float:
-    """Parse the simple '<n> <unit>' interval strings Structured
-    Streaming accepts for windows/watermarks into seconds."""
-    m = re.fullmatch(r"\s*(\d+(?:\.\d+)?)\s*(millisecond|second|minute|hour|day)s?\s*", interval)
-    if not m:
-        raise ValueError(f"unsupported interval string: {interval!r}")
-    return float(m.group(1)) * _UNIT_SECONDS[m.group(2)]
-
+WINDOW_SECONDS = 5
+WATERMARK_SECONDS = 10
+# Kafka Streams' minimum window-store retention: window size + grace
+RETENTION_SECONDS = WINDOW_SECONDS + WATERMARK_SECONDS
 
 _SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 _CHANGELOG_CHECKPOINTING = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
@@ -62,30 +52,18 @@ _FILE_SYSTEM_MANAGER = (
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
 )
 
-# sentinel: "caller didn't choose" → window + watermark; explicit None
-# disables eviction (tests / changelog audits)
-_DEFAULT_RETENTION: float = object()  # type: ignore[assignment]
 
-
-def streaming_windowed_counts(
-    events: DataFrame,
-    window: str = "5 seconds",
-    watermark: str = "10 seconds",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    threshold: float = 100.0,
-) -> DataFrame:
-    """Bind the batch flagship builders to a streaming DataFrame.
+def streaming_windowed_counts(events: DataFrame) -> DataFrame:
+    """Bind the batch flagship builders to a streaming DataFrame of
+    ``EVENTS_SCHEMA`` rows.
 
     Identical logic to the batch `windowed_page_counts` with a
     watermark prepended — the watermark bounds late data (reference
     default grace is 24 h, see module docstring) and lets Spark evict
     window state; without it, update-mode agg state grows forever.
     """
-    withw = events.withWatermark(ts_col, watermark)
-    counts = ops.windowed_page_counts(
-        withw, window=window, ts_col=ts_col, key_col=key_col, threshold=threshold
-    )
+    withw = events.withWatermark("ts", f"{WATERMARK_SECONDS} seconds")
+    counts = ops.windowed_page_counts(withw, window=f"{WINDOW_SECONDS} seconds")
     return ops.unwrap_windowed_key(counts, keep_bounds=True)
 
 
@@ -130,17 +108,16 @@ class CountStore:
     SURVEY.md §4.2).
 
     It counts the reference's fixed topology over ``EVENTS_SCHEMA``
-    rows: ``value > 100``, keyed by ``event_type``, in ``window``-sized
-    tumbling windows of ``ts`` (``streaming_windowed_counts``'
-    defaults); only ``window`` and ``watermark`` are parameters.
+    rows (``streaming_windowed_counts``): ``value > 100``, keyed by
+    ``event_type``, in 5 s tumbling windows of ``ts``.
 
     The changelog upserts into a `DictKVStore` via foreachBatch — the
     in-process stand-in for an external KV (Redis/Cassandra). Store size
     is BOUNDED: upserts are idempotent by (name, window_start,
-    window_end) key and windows older than the retention horizon
-    (window + watermark by default, the Kafka Streams windowSize+grace
-    retention rule) are evicted on write. A long-running stream holds
-    only the live window set.
+    window_end) key and windows older than ``RETENTION_SECONDS``
+    (window + watermark, the Kafka Streams windowSize+grace retention
+    rule) are evicted on write. A long-running stream holds only the
+    live window set.
 
     The query starts with ``count_store_query_conf``: one state
     partition per core (``defaultParallelism``), not the session's
@@ -161,21 +138,9 @@ class CountStore:
     store: DictKVStore
 
     @classmethod
-    def start(
-        cls,
-        spark: SparkSession,
-        events: DataFrame,
-        window: str = "5 seconds",
-        watermark: str = "10 seconds",
-        trigger_seconds: float | None = None,
-        retention_seconds: "float | None" = _DEFAULT_RETENTION,
-        checkpoint: str | None = None,
-    ) -> "CountStore":
-        counts = streaming_windowed_counts(events, window=window, watermark=watermark)
-        if retention_seconds is _DEFAULT_RETENTION:
-            # Kafka Streams' minimum window-store retention: size + grace
-            retention_seconds = interval_seconds(window) + interval_seconds(watermark)
-        store = DictKVStore(retention_seconds=retention_seconds)
+    def start(cls, spark: SparkSession, events: DataFrame, checkpoint: str | None = None) -> "CountStore":
+        counts = streaming_windowed_counts(events)
+        store = DictKVStore(retention_seconds=RETENTION_SECONDS)
 
         def upsert_batch(batch: DataFrame, epoch_id: int) -> None:
             # the changelog batch holds only CHANGED (key, window) rows;
@@ -189,9 +154,6 @@ class CountStore:
         writer = counts.writeStream.outputMode("update").foreachBatch(upsert_batch)
         if checkpoint is not None:
             writer = writer.option("checkpointLocation", checkpoint)
-        if trigger_seconds is not None:
-            # the reference's commit.interval.ms=1000 emission cadence
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         # start() copies the session conf into the query, so the
         # query's settings only need to hold around it
         session = events.sparkSession
@@ -220,14 +182,14 @@ class CountStore:
             rows, "name string, window_start timestamp, window_end timestamp, cnt long"
         )
 
-    def range_fetch(self, anchor: datetime | None = None, span: str = "5 seconds") -> dict[str, int]:
+    def range_fetch(self, anchor: datetime | None = None) -> dict[str, int]:
         """Q1 — the reference's 1 Hz interactive query
         (PageEventController.java:47-55): windows starting within
-        [anchor - span, anchor] folded to latest-window-per-page, read
+        [anchor - window, anchor] folded to latest-window-per-page, read
         from the store in process. ``anchor`` defaults to now()."""
         # keys are naive local time: TimestampType.fromInternal uses datetime.fromtimestamp
         anchor = anchor if anchor is not None else datetime.now()
-        return self.store.latest(anchor - timedelta(seconds=interval_seconds(span)), anchor)
+        return self.store.latest(anchor - timedelta(seconds=WINDOW_SECONDS), anchor)
 
     def stop(self) -> None:
         self.query.stop()
@@ -237,8 +199,6 @@ def streaming_session_counts(
     events: DataFrame,
     gap: str = "5 seconds",
     watermark: str = "10 seconds",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
 ) -> DataFrame:
     """The streaming twin of batch `q_session_window` (VERDICT r06
     #7c): per-key session windows that EXTEND while events keep
@@ -249,8 +209,8 @@ def streaming_session_counts(
     flagship doesn't exercise. Append output mode is the natural
     changelog: exactly one row per FINALIZED session, emitted the
     trigger after its close crosses the watermark."""
-    withw = events.withWatermark(ts_col, watermark)
-    return ops.session_window_counts(withw, gap=gap, ts_col=ts_col, key_col=key_col)
+    withw = events.withWatermark("ts", watermark)
+    return ops.session_window_counts(withw, gap=gap)
 
 
 def start_session_stream(
@@ -259,16 +219,13 @@ def start_session_stream(
     gap: str = "5 seconds",
     watermark: str = "10 seconds",
     trigger_seconds: float | None = 1.0,
-    **kwargs,
 ) -> StreamingQuery:
     """Live-trigger session lane: `streaming_session_counts` on the
     reference's 1 s commit cadence (`application.properties:22`
     commit.interval.ms=1000), append mode into a memory sink named
     ``table`` — one durable row per closed session, no updates to
     retract. Caller stops the query."""
-    sessions = streaming_session_counts(
-        events, gap=gap, watermark=watermark, **kwargs
-    ).select(
+    sessions = streaming_session_counts(events, gap=gap, watermark=watermark).select(
         "name",
         F.col("session_window.start").alias("session_start"),
         F.col("session_window.end").alias("session_end"),

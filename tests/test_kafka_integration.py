@@ -59,7 +59,7 @@ def test_kafka_roundtrip_live(spark, tmp_path):
         F.col("kafka_ts").alias("ts"),
         F.col("duration").cast("double").alias("value"),
     )
-    counts = streaming_windowed_counts(events, window="5 seconds", watermark="10 seconds")
+    counts = streaming_windowed_counts(events)
     q = write_count_changelog_kafka(
         counts, topic=t4, bootstrap=BOOTSTRAP, checkpoint=str(tmp_path / "ckpt")
     )

@@ -18,15 +18,15 @@ from pyspark.sql import functions as F
 
 from kafka_streams_spring_cloud_stream_tp1_spark.operators import core as ops
 from kafka_streams_spring_cloud_stream_tp1_spark.streaming import CountStore, DictKVStore
+from kafka_streams_spring_cloud_stream_tp1_spark.streaming.pipeline import WINDOW_SECONDS
 
 _T0 = datetime(2024, 1, 1)
-_WINDOW_S = 5
 _PAGES = [f"P{i}" for i in range(6)]
 
 
 def _window(k: int) -> tuple[datetime, datetime]:
-    start = _T0 + timedelta(seconds=_WINDOW_S * k)
-    return start, start + timedelta(seconds=_WINDOW_S)
+    start = _T0 + timedelta(seconds=WINDOW_SECONDS * k)
+    return start, start + timedelta(seconds=WINDOW_SECONDS)
 
 
 # window index -> {page: count}: 1-6 tumbling windows
@@ -39,7 +39,7 @@ stores_st = st.dictionaries(
 # anchors in ms after _T0: window starts (anchor on a start, and with a
 # 5 s span anchor − span on a start too) or anywhere around the windows
 anchors_st = st.one_of(
-    st.sampled_from(range(-10_000, 70_001, _WINDOW_S * 1000)),
+    st.sampled_from(range(-10_000, 70_001, WINDOW_SECONDS * 1000)),
     st.integers(-10_000, 70_000),
 )
 
@@ -48,26 +48,31 @@ def _rows(windows: dict[int, dict[str, int]]) -> list[tuple]:
     return [((name, *_window(k)), cnt) for k, pages in windows.items() for name, cnt in pages.items()]
 
 
-@given(windows=stores_st, anchor_ms=anchors_st, span=st.sampled_from(["5 seconds", "10 seconds"]))
-@example(windows={}, anchor_ms=5_000, span="5 seconds")  # empty store
-@example(windows={1: {"P1": 3}, 3: {"P1": 9}}, anchor_ms=5_000, span="5 seconds")  # anchor == start
+@given(windows=stores_st, anchor_ms=anchors_st, span_s=st.sampled_from([WINDOW_SECONDS, 10]))
+@example(windows={}, anchor_ms=5_000, span_s=WINDOW_SECONDS)  # empty store
+@example(windows={1: {"P1": 3}, 3: {"P1": 9}}, anchor_ms=5_000, span_s=WINDOW_SECONDS)  # anchor == start
 # anchor − span == start, that window holding a page the later one
 # lacks; upserted newest first, so the newer window wins by start
 # order, not by insertion order
-@example(windows={2: {"P1": 4}, 1: {"P1": 3, "P3": 2}}, anchor_ms=10_000, span="5 seconds")
+@example(windows={2: {"P1": 4}, 1: {"P1": 3, "P3": 2}}, anchor_ms=10_000, span_s=WINDOW_SECONDS)
 @settings(max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-def test_range_fetch_fold_matches_latest_window_per_key(spark, windows, anchor_ms, span):
+def test_range_fetch_fold_matches_latest_window_per_key(spark, windows, anchor_ms, span_s):
+    """Q1's own span (the window) through `CountStore.range_fetch`;
+    a wider span through the store's `latest` that it reads."""
     kv = DictKVStore()
     rows = _rows(windows)
     kv.upsert(rows, 0)
     anchor = _T0 + timedelta(milliseconds=anchor_ms)
-    got = CountStore(spark=spark, query=None, store=kv).range_fetch(anchor=anchor, span=span)
+    if span_s == WINDOW_SECONDS:
+        got = CountStore(spark=spark, query=None, store=kv).range_fetch(anchor=anchor)
+    else:
+        got = kv.latest(anchor - timedelta(seconds=span_s), anchor)
 
     df = spark.createDataFrame(
         [(name, start, cnt) for (name, start, _), cnt in rows],
         "name string, window_start timestamp, cnt long",
     )
-    ref = ops.latest_window_per_key(df, anchor_ts=F.lit(anchor), span=span).collect()
+    ref = ops.latest_window_per_key(df, anchor_ts=F.lit(anchor), span=f"{span_s} seconds").collect()
     assert got == {r["name"]: r["cnt"] for r in ref}
     assert kv.snapshot() == dict(rows)
 

@@ -26,9 +26,7 @@ def test_publish_analytics_and_index(spark, tmp_path):
     stream_dir = tmp_path / "in"
     stream_dir.mkdir()
     events = spark.readStream.schema(EVENTS_SCHEMA).json(str(stream_dir))
-    store = CountStore.start(
-        spark, events, window="5 seconds", watermark="10 seconds", retention_seconds=None
-    )
+    store = CountStore.start(spark, events)
 
     published: list[tuple[str, str | None]] = []
 
@@ -92,6 +90,32 @@ def test_publish_unconfigured_returns_503(spark):
         srv.stop()
 
 
+def test_publish_failure_answers_500():
+    """A publish hook that raises gets a 500 carrying its error, in
+    the /analytics error-frame format, not a dropped connection."""
+
+    def publish(name: str, topic: str | None) -> dict:
+        raise OSError("broker unreachable")
+
+    srv = AnalyticsServer(fetch=lambda: {}, publish=publish).start()
+    try:
+        try:
+            urllib.request.urlopen(f"{srv.url}/publish?name=P7&topic=T2", timeout=10)
+            assert False, "expected 500"
+        except urllib.error.HTTPError as e:
+            assert e.code == 500
+            assert json.loads(e.read()) == {"error": "OSError: broker unreachable"}
+    finally:
+        srv.stop()
+
+    srv = AnalyticsServer(fetch=lambda: {}, publish=lambda name, topic: {"name": name}).start()
+    try:
+        with urllib.request.urlopen(f"{srv.url}/publish?name=P7", timeout=10) as r:
+            assert json.loads(r.read()) == {"name": "P7"}
+    finally:
+        srv.stop()
+
+
 def _sse_body(url: str) -> list[bytes]:
     with urllib.request.urlopen(url, timeout=10) as r:
         return r.read().splitlines()
@@ -146,9 +170,7 @@ def test_stopped_query_is_reported_not_served(spark, tmp_path):
     stream_dir.mkdir()
     _write_batch(str(stream_dir), "b1", [_event(0, 1.0, "P1", 500.0)])
     events = spark.readStream.schema(EVENTS_SCHEMA).json(str(stream_dir))
-    store = CountStore.start(
-        spark, events, window="5 seconds", watermark="10 seconds", retention_seconds=None
-    )
+    store = CountStore.start(spark, events)
     srv = AnalyticsServer.for_store(store, anchor=_EPOCH0 + timedelta(seconds=1), interval=0.05).start()
     try:
         store.process_all()

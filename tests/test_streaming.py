@@ -57,12 +57,7 @@ def stream_dir(tmp_path):
 
 def _start_store(spark, stream_dir):
     events = spark.readStream.schema(EVENTS_SCHEMA).json(stream_dir)
-    # retention disabled: these tests assert on closed windows, which
-    # the production default (window + watermark) would evict;
-    # test_kv_store_retention_bounds_size covers the eviction path
-    return CountStore.start(
-        spark, events, window="5 seconds", watermark="10 seconds", retention_seconds=None
-    )
+    return CountStore.start(spark, events)
 
 
 def test_windowed_counts_and_range_fetch(spark, stream_dir):
@@ -105,7 +100,19 @@ def test_windowed_counts_and_range_fetch(spark, stream_dir):
 
 
 def test_watermark_drops_too_late_data(spark, stream_dir):
+    """A too-late event never reaches the store's changelog. It is
+    observed on the upserts, not the store: at stream time 60 s the
+    15 s retention has already evicted window [0, 5) from the store."""
     store = _start_store(spark, stream_dir)
+    upserts: list[list[tuple]] = []
+    upsert = store.store.upsert
+
+    def recorded(rows, epoch_id):
+        upserts.append(rows)
+        upsert(rows, epoch_id)
+
+    store.store.upsert = recorded
+    first_window = ("P1", _EPOCH0, _EPOCH0 + timedelta(seconds=5))
     try:
         # advance stream-time to 60s => watermark 50s after this batch
         _write_batch(
@@ -114,6 +121,8 @@ def test_watermark_drops_too_late_data(spark, stream_dir):
             [_event(0, 1.0, "P1", 200.0), _event(1, 60.0, "P1", 200.0)],
         )
         store.process_all()
+        assert (first_window, 1) in [row for rows in upserts for row in rows]
+        after_first = len(upserts)
 
         _write_batch(
             stream_dir,
@@ -124,24 +133,24 @@ def test_watermark_drops_too_late_data(spark, stream_dir):
             ],
         )
         store.process_all()
-        snap = {
-            (r["name"], r["window_start"].minute, r["window_start"].second): r["cnt"]
-            for r in store.snapshot().collect()
-        }
-        assert snap[("P1", 0, 0)] == 1, "too-late event must NOT update the closed window"
-        assert snap[("P1", 1, 0)] == 2, "late-but-within-watermark event must update"
+        late = [row for rows in upserts[after_first:] for row in rows if row[0] == first_window]
+        assert not late, "too-late event must NOT update the closed window"
+        w60 = _EPOCH0 + timedelta(seconds=60)
+        assert store.store.snapshot()[("P1", w60, w60 + timedelta(seconds=5))] == 2, (
+            "late-but-within-watermark event must update"
+        )
     finally:
         store.stop()
 
 
 def test_kv_store_retention_bounds_size(spark, stream_dir):
-    """Long-run serving-store behavior: with the default retention
+    """Long-run serving-store behavior: with the store's retention
     (window + watermark), windows falling behind the newest stream time
     are evicted on write — store size tracks the LIVE window set, not
     stream lifetime (the round-1 memory-sink growth defect, fixed by
     the KV backend)."""
     events = spark.readStream.schema(EVENTS_SCHEMA).json(stream_dir)
-    store = CountStore.start(spark, events, window="5 seconds", watermark="10 seconds")
+    store = CountStore.start(spark, events)
     try:
         # 5 batches, stream time advancing 20 s per batch -> 5 distinct
         # windows touched over a 100 s stream life

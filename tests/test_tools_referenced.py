@@ -1,8 +1,8 @@
-"""Every script under ``tools/`` is run by something: a test, the
-package, or a current run guide names it. A tool nothing names is an
-orphan; delete it (git history keeps it) instead of carrying it.
-Historical reports (BASELINE.md, OPTIMIZATION_r*.md, ...) do not count
-as a reference."""
+"""Every script under ``tools/`` and ``examples/`` is run by something:
+a test, the package, or a current run guide names it. A script nothing
+names is an orphan; delete it (git history keeps it) instead of
+carrying it. Historical reports (BASELINE.md, OPTIMIZATION_r*.md, ...)
+do not count as a reference."""
 
 from __future__ import annotations
 
@@ -21,9 +21,18 @@ def _referrers() -> list[Path]:
     ]
 
 
-def test_every_tool_is_named_by_a_test_the_package_or_a_guide():
+def _orphans(directory: str) -> list[str]:
     texts = [p.read_text(encoding="utf-8") for p in _referrers()]
-    tools = sorted(p.name for p in (_ROOT / "tools").iterdir() if p.is_file())
-    assert tools
-    orphans = [name for name in tools if not any(name in text for text in texts)]
+    scripts = sorted(p.name for p in (_ROOT / directory).iterdir() if p.is_file())
+    assert scripts
+    return [name for name in scripts if not any(name in text for text in texts)]
+
+
+def test_every_tool_is_named_by_a_test_the_package_or_a_guide():
+    orphans = _orphans("tools")
     assert not orphans, f"tools nothing names (delete them or use them): {orphans}"
+
+
+def test_every_example_is_named_by_a_test_the_package_or_a_guide():
+    orphans = _orphans("examples")
+    assert not orphans, f"examples nothing names (delete them or use them): {orphans}"

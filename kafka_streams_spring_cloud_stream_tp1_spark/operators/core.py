@@ -59,42 +59,6 @@ def windowed_page_counts(
     )
 
 
-def sliding_window_counts(
-    df: DataFrame,
-    window: str = "5 seconds",
-    slide: str = "1 second",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Hopping/sliding window count (SURVEY.md §2.2 — Kafka Streams'
-    `TimeWindows.advanceBy`, absent from the reference). Each record
-    lands in window/slide overlapping windows; Catalyst expands them
-    with a single generate + the same one-shuffle partial/final agg as
-    tumbling. Runs batch or streaming (add a watermark upstream for
-    streams)."""
-    return (
-        df.groupBy(F.window(ts_col, window, slide), F.col(key_col).alias("name"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def session_window_counts(
-    df: DataFrame,
-    gap: str = "5 seconds",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Session window count (Kafka Streams `SessionWindows.with(gap)`,
-    absent from the reference): windows extend while events arrive
-    within ``gap`` of each other, per key. Spark merges sessions in
-    the streaming state store; batch mode computes the same via a
-    sort-based session assignment. Runs batch or streaming."""
-    return (
-        df.groupBy(F.session_window(ts_col, gap), F.col(key_col).alias("name"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
 def salted_agg(
     df: DataFrame,
     key: str,

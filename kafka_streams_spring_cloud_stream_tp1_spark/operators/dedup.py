@@ -59,6 +59,10 @@ def _hash_shingles(sh: DataFrame) -> DataFrame:
     lane's verify stage). The hash is computed once per doc per join
     side in the projection feeding the join — never per pair.
 
+    `exact_jaccard`'s |A|+|B|−|A∩B| denominator assumes distinct
+    elements, so a within-document xxhash64 collision shifts both set
+    sizes, not only membership.
+
     Candidate GENERATION stays on the exact strings: bucket keys and
     df-eligibility counts are untouched, so discoverability is
     bit-identical to the contract; only the pair-local Jaccard

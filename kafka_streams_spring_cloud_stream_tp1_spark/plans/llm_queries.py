@@ -2691,17 +2691,16 @@ def _incremental_dedup_sql() -> str:
 
 @query("q_incremental_dedup", oracle=_incremental_dedup_sql())
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental (corpus-vs-batch) near-dup gate — the BATCH form
-    of the streaming ingest gate (`streaming/dedup_stream.py`): new
-    documents (here the deterministic doc_id%5=4 slice, standing in
-    for a fresh crawl delta) are flagged when they share any MinHash
-    LSH band bucket with an EXISTING document. The signature pipeline
-    runs once over old∪new; the probe is an equality join on
-    (band, band_hash) — at 100 TB the old side is a prebuilt band
-    index read from storage and the join is index-sized, never
-    corpus-text-sized. Output: each new doc with the count of old
-    docs it collides with (candidate-level, the recall stage;
-    q_dedup_minhash_lsh is the verify stage)."""
+    """Incremental (corpus-vs-batch) near-dup gate — the ingest-time
+    dedup check run as a batch: new documents (here the deterministic
+    doc_id%5=4 slice, standing in for a fresh crawl delta) are flagged
+    when they share any MinHash LSH band bucket with an EXISTING
+    document. The signature pipeline runs once over old∪new; the
+    probe is an equality join on (band, band_hash) — at 100 TB the old
+    side is a prebuilt band index read from storage and the join is
+    index-sized, never corpus-text-sized. Output: each new doc with
+    the count of old docs it collides with (candidate-level, the
+    recall stage; q_dedup_minhash_lsh is the verify stage)."""
     from ..operators.dedup import minhash_signatures
 
     docs = load_table(spark, sf_dir, "documents")

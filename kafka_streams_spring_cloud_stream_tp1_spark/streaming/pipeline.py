@@ -34,7 +34,6 @@ from dataclasses import dataclass
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import core as ops
@@ -193,47 +192,3 @@ class CountStore:
 
     def stop(self) -> None:
         self.query.stop()
-
-
-def streaming_session_counts(
-    events: DataFrame,
-    gap: str = "5 seconds",
-    watermark: str = "10 seconds",
-) -> DataFrame:
-    """The streaming twin of batch `q_session_window` (VERDICT r06
-    #7c): per-key session windows that EXTEND while events keep
-    arriving within ``gap`` and close once the watermark passes
-    last_event + gap. Spark's session state store merges adjacent
-    partial sessions across micro-batches — the Kafka Streams
-    `SessionWindows.with(gap)` semantics the reference's tumbling
-    flagship doesn't exercise. Append output mode is the natural
-    changelog: exactly one row per FINALIZED session, emitted the
-    trigger after its close crosses the watermark."""
-    withw = events.withWatermark("ts", watermark)
-    return ops.session_window_counts(withw, gap=gap)
-
-
-def start_session_stream(
-    events: DataFrame,
-    table: str = "session_store",
-    gap: str = "5 seconds",
-    watermark: str = "10 seconds",
-    trigger_seconds: float | None = 1.0,
-) -> StreamingQuery:
-    """Live-trigger session lane: `streaming_session_counts` on the
-    reference's 1 s commit cadence (`application.properties:22`
-    commit.interval.ms=1000), append mode into a memory sink named
-    ``table`` — one durable row per closed session, no updates to
-    retract. Caller stops the query."""
-    sessions = streaming_session_counts(events, gap=gap, watermark=watermark).select(
-        "name",
-        F.col("session_window.start").alias("session_start"),
-        F.col("session_window.end").alias("session_end"),
-        "cnt",
-    )
-    writer = (
-        sessions.writeStream.outputMode("append").format("memory").queryName(table)
-    )
-    if trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -1,4 +1,4 @@
-"""foreachBatch sinks: the queryable store and the lakehouse ingest.
+"""The queryable store that the count store's changelog upserts into.
 
 `CountStore` (pipeline.py) upserts the windowed-count changelog into a
 key-value store via foreachBatch — every micro-batch arrives as a
@@ -7,7 +7,7 @@ Cassandra, Redis, Delta) becomes a streaming sink with exactly-once
 semantics when the write is idempotent (upsert by key) and the
 checkpoint tracks the epoch.
 
-`DictKVStore` here is the in-process stand-in for that external KV —
+`DictKVStore` is the in-process stand-in for that external KV —
 a real deployment swaps `upsert` for the store's batch-write call;
 everything else (update-mode changelog, checkpointing, recovery) is
 the production wiring, exercised by tests/test_checkpoint_recovery.py.
@@ -18,8 +18,6 @@ from __future__ import annotations
 
 import threading
 from datetime import datetime, timedelta
-
-from pyspark.sql import DataFrame
 
 
 class DictKVStore:
@@ -59,29 +57,3 @@ class DictKVStore:
         with self._lock:
             in_range = sorted(w for w in self._windows if lo <= w[0] <= hi)
             return {n: c for w in in_range for n, c in self._windows[w].items()}
-
-
-def start_parquet_ingest(
-    events: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_cols: list[str] | None = None,
-    trigger_seconds: float | None = None,
-):
-    """Streaming → partitioned parquet (the lakehouse ingest pattern):
-    each micro-batch appends files under ``path``, directory-
-    partitioned for downstream pruning; the checkpoint makes the
-    append exactly-once (a replayed epoch is skipped, not re-written).
-    At scale, pair with periodic compaction — micro-batch appends
-    produce one file per partition-dir per trigger."""
-    writer = (
-        events.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    if trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -189,135 +189,6 @@ def test_count_store_query_conf_follows_session_checkpoint_root(spark):
         spark.conf.unset(root)
 
 
-def test_streaming_parquet_ingest_exactly_once(spark, tmp_path):
-    """Streaming append to partitioned parquet: all rows land exactly
-    once, directory-partitioned; a restart from the checkpoint does
-    not duplicate already-committed batches."""
-    from kafka_streams_spring_cloud_stream_tp1_spark.streaming.sinks import (
-        start_parquet_ingest,
-    )
-
-    src, out, ckpt = tmp_path / "in", str(tmp_path / "lake"), str(tmp_path / "ck")
-    src.mkdir()
-    events = lambda: spark.readStream.schema(EVENTS_SCHEMA).json(str(src))  # noqa: E731
-
-    q = start_parquet_ingest(events(), out, ckpt, partition_cols=["event_type"])
-    try:
-        _write_batch(str(src), "b1", [_event(0, 1.0, "P1"), _event(1, 2.0, "P2")])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    q2 = start_parquet_ingest(events(), out, ckpt, partition_cols=["event_type"])
-    try:
-        _write_batch(str(src), "b2", [_event(2, 3.0, "P1")])
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    back = spark.read.parquet(out)
-    assert sorted(r["event_id"] for r in back.collect()) == [0, 1, 2]
-    # partition dirs exist per event_type
-    assert {d for d in os.listdir(out) if d.startswith("event_type=")} == {
-        "event_type=P1",
-        "event_type=P2",
-    }
-
-
-def test_running_ewma_state_survives_restart(spark, tmp_path):
-    """applyInPandasWithState EWMA: stop the query, restart from the
-    same checkpoint, feed more events — the (n, ewma) carry must
-    resume from the checkpointed state, not restart from scratch
-    (memory sink can't recover a checkpoint, so the changelog lands
-    in a foreachBatch dict like the KV-store tests). Batch-fold
-    reference: 10 -> 15 -> 27.5 across the restart."""
-    from kafka_streams_spring_cloud_stream_tp1_spark.streaming import running_ewma
-
-    src = tmp_path / "in"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    events = lambda: spark.readStream.schema(EVENTS_SCHEMA).json(str(src))  # noqa: E731
-    latest: dict = {}
-
-    def sink(batch_df, _epoch):
-        for r in batch_df.collect():
-            latest[r["user_id"]] = (r["n_events"], r["ewma"])
-
-    def start():
-        return (
-            running_ewma(events())
-            .writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    q1 = start()
-    try:
-        _write_batch(str(src), "b1", [_event(0, 1.0, value=10.0), _event(1, 2.0, value=20.0)])
-        q1.processAllAvailable()
-        assert latest[1] == (2, 15.0)
-    finally:
-        q1.stop()
-
-    q2 = start()
-    try:
-        _write_batch(str(src), "b2", [_event(2, 3.0, value=40.0)])
-        q2.processAllAvailable()
-        # state restored: 3 events total, e = 15*0.5 + 40*0.5 = 27.5;
-        # a from-scratch restart would show (1, 40.0)
-        assert latest[1] == (3, 27.5)
-    finally:
-        q2.stop()
-
-
-_KILL_WRITER = r"""
-import json, os, sys, time
-
-sys.path.insert(0, sys.argv[4])  # repo root (script runs from tmp_path)
-from pyspark.sql import SparkSession
-
-src, out, ckpt = sys.argv[1], sys.argv[2], sys.argv[3]
-spark = (
-    SparkSession.builder.master("local[2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
-from kafka_streams_spring_cloud_stream_tp1_spark.schemas import EVENTS_SCHEMA
-from kafka_streams_spring_cloud_stream_tp1_spark.streaming.sinks import (
-    start_parquet_ingest,
-)
-
-q = start_parquet_ingest(
-    spark.readStream.schema(EVENTS_SCHEMA).json(src), out, ckpt
-)
-print("STARTED", flush=True)
-# feed batches forever (atomic rename so a SIGKILL never leaves a
-# half-written source file); the parent kills this process mid-trigger
-i = 0
-while True:
-    rows = [
-        {
-            "event_id": i * 50 + j,
-            "ts": "2024-01-01 00:00:01.000000",
-            "user_id": 1,
-            "event_type": "P%d" % (j % 2),
-            "value": 200.0,
-        }
-        for j in range(50)
-    ]
-    tmp, dst = os.path.join(src, ".b%d.tmp" % i), os.path.join(src, "b%d.json" % i)
-    with open(tmp, "w") as f:
-        for r in rows:
-            f.write(json.dumps(r) + "\n")
-    os.rename(tmp, dst)
-    i += 1
-    time.sleep(0.15)
-"""
-
-
 def _kill_mid_trigger(script_text, args, ckpt, tmp_path):
     """Run ``script_text`` as a separate driver process that prints
     STARTED once its query runs and then feeds source files; watch
@@ -376,45 +247,6 @@ def _kill_mid_trigger(script_text, args, ckpt, tmp_path):
     finally:
         if proc.poll() is None:
             proc.kill()
-
-
-def test_sigkill_mid_trigger_recovers_exactly_once(spark, tmp_path):
-    """VERDICT r09 #6: the recovery semantics a 100 TB deployment
-    relies on is UNCLEAN failure, not q.stop(). A separate driver
-    process runs the parquet ingest while continuously feeding source
-    batches and is SIGKILLed mid-trigger. Restarting from the same
-    checkpoint in this session must land every source row exactly
-    once: the file-sink metadata log ignores files from the
-    uncommitted epoch's partial write and the replayed batch re-emits
-    them once."""
-    src, out, ckpt = tmp_path / "in", str(tmp_path / "lake"), str(tmp_path / "ck")
-    src.mkdir()
-    _kill_mid_trigger(_KILL_WRITER, [str(src), out, ckpt], ckpt, tmp_path)
-
-    # every source row the dead process had, exactly once after recovery
-    expected = []
-    for f in sorted(glob.glob(f"{src}/b*.json")):
-        with open(f) as fh:
-            expected += [json.loads(line)["event_id"] for line in fh]
-    assert expected, "no source batches were written"
-
-    from kafka_streams_spring_cloud_stream_tp1_spark.streaming.sinks import (
-        start_parquet_ingest,
-    )
-
-    q = start_parquet_ingest(
-        spark.readStream.schema(EVENTS_SCHEMA).json(str(src)), out, ckpt
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = sorted(r["event_id"] for r in spark.read.parquet(out).collect())
-    assert got == sorted(expected), (
-        f"exactly-once violated: {len(got)} rows vs {len(expected)} expected; "
-        f"dupes={len(got) - len(set(got))}"
-    )
 
 
 _PAGES = ["P1", "P2", "P3", "P4", "P5"]

@@ -289,164 +289,3 @@ def test_console_sink_prints_each_record_between_banners(spark, stream_dir):
         "props": None,
     }
     assert out.getvalue() == f"{'*' * 12}\n{row}\n{'*' * 12}\n"
-
-
-def _uf_closure(pairs):
-    """Python union-find ground truth: doc -> min id in component."""
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {x: find(x) for x in parent}
-
-
-def test_stream_incremental_cc_matches_batch_closure(spark, tmp_path):
-    """Daily-crawl CC as a micro-batch stream (VERDICT r09 #7a): each
-    pair-discovery batch advances the versioned label table via star
-    edges ∪ batch pairs; after EVERY trigger the table must equal the
-    batch closure over all pairs seen so far — including the hard
-    case, a batch that BRIDGES two previously separate clusters."""
-    import json
-
-    from kafka_streams_spring_cloud_stream_tp1_spark.streaming import (
-        stream_incremental_dup_clusters,
-    )
-
-    src = tmp_path / "pairs_in"
-    src.mkdir()
-    labels_root = str(tmp_path / "labels")
-    snapshots: dict[int, dict] = {}
-
-    def sink(labels, batch_id):
-        snapshots[batch_id] = {
-            r["doc_id"]: r["cluster_id"] for r in labels.collect()
-        }
-
-    stream = spark.readStream.schema("doc_a long, doc_b long").json(str(src))
-    q = stream_incremental_dup_clusters(stream, labels_root, sink)
-
-    batches = [
-        [(2, 1), (3, 4)],          # two clusters {1,2} {3,4}
-        [(6, 5)],                  # third cluster {5,6}
-        [(2, 3)],                  # BRIDGE: {1,2,3,4} must merge
-        [(7, 8), (5, 7)],          # extend {5,6} through a new chain
-    ]
-    seen: list[tuple[int, int]] = []
-    try:
-        for i, pairs in enumerate(batches):
-            with open(src / f"b{i}.json", "w") as f:
-                for a, b in pairs:
-                    f.write(json.dumps({"doc_a": a, "doc_b": b}) + "\n")
-            q.processAllAvailable()
-            seen += pairs
-            got = snapshots[max(snapshots)]
-            assert got == _uf_closure(seen), (i, got, _uf_closure(seen))
-    finally:
-        q.stop()
-
-
-def test_stream_incremental_cc_labels_survive_restart(spark, tmp_path):
-    """The label table is parquet state, not stream state: a NEW query
-    (fresh checkpoint) over the same label root continues from the
-    committed snapshot — doc 9 joining via a single pair to doc 2
-    must land in cluster 1, which is only knowable from prior labels."""
-    import json
-
-    from kafka_streams_spring_cloud_stream_tp1_spark.streaming import (
-        latest_labels,
-        stream_incremental_dup_clusters,
-    )
-
-    labels_root = str(tmp_path / "labels")
-    out: dict[int, dict] = {}
-
-    def mk(run):
-        src = tmp_path / f"in{run}"
-        src.mkdir()
-        stream = spark.readStream.schema("doc_a long, doc_b long").json(str(src))
-        return src, stream_incremental_dup_clusters(
-            stream, labels_root, lambda df, b: out.__setitem__(b, {
-                r["doc_id"]: r["cluster_id"] for r in df.collect()
-            })
-        )
-
-    src1, q1 = mk(1)
-    try:
-        with open(src1 / "b0.json", "w") as f:
-            f.write(json.dumps({"doc_a": 2, "doc_b": 1}) + "\n")
-            f.write(json.dumps({"doc_a": 3, "doc_b": 2}) + "\n")
-        q1.processAllAvailable()
-    finally:
-        q1.stop()
-
-    src2, q2 = mk(2)
-    try:
-        with open(src2 / "b0.json", "w") as f:
-            f.write(json.dumps({"doc_a": 9, "doc_b": 2}) + "\n")
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-
-    labels, version = latest_labels(spark, labels_root)
-    got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 9: 1}, got
-    assert version == 1  # one committed version per non-empty batch
-
-
-def test_stream_incremental_cc_checkpoint_resumes_offsets(spark, tmp_path):
-    """Durable source offsets (ADVICE r10): with checkpoint_location
-    set, a RESTARTED query over the same source neither re-reads the
-    consumed pair history (no spurious new label version when nothing
-    arrived while down) nor skips pairs that arrived while down — the
-    checkpoint and the label root survive restarts together."""
-    import json
-
-    from kafka_streams_spring_cloud_stream_tp1_spark.streaming import (
-        latest_labels,
-        stream_incremental_dup_clusters,
-    )
-
-    src = tmp_path / "pairs_in"
-    src.mkdir()
-    labels_root = str(tmp_path / "labels")
-    cp = str(tmp_path / "cp")
-
-    def run_once():
-        stream = spark.readStream.schema("doc_a long, doc_b long").json(str(src))
-        q = stream_incremental_dup_clusters(
-            stream, labels_root, checkpoint_location=cp
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    with open(src / "b0.json", "w") as f:
-        f.write(json.dumps({"doc_a": 2, "doc_b": 1}) + "\n")
-    run_once()
-    _, v0 = latest_labels(spark, labels_root)
-    assert v0 == 0
-
-    # restart with NOTHING new: a session-temp checkpoint would replay
-    # the full history as one batch and mint a spurious version
-    run_once()
-    _, v1 = latest_labels(spark, labels_root)
-    assert v1 == 0, "restart with no new files must not re-apply history"
-
-    # pairs that arrived while the query was DOWN must be picked up
-    with open(src / "b1.json", "w") as f:
-        f.write(json.dumps({"doc_a": 9, "doc_b": 2}) + "\n")
-    run_once()
-    labels, v2 = latest_labels(spark, labels_root)
-    got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
-    assert v2 == 1
-    assert got == {1: 1, 2: 1, 9: 1}, got
